@@ -152,11 +152,11 @@ object ParquetIO {
     * columns (query.go:146); we get pruning for free.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val available = spark.read.parquet(path).schema.fieldNames.toSet
+    val df = spark.read.parquet(path) // resolves the path and footer schema once
+    val available = df.schema.fieldNames.toSet
     val wanted = Schema.parsedSchema.fields.filter(f => available.contains(f.name))
     require(available.contains(Schema.Timestamp) && available.contains(Schema.Content),
       s"required columns timestamp/content missing in $path")  // query.go:228-231
-    val df = spark.read.parquet(path)
     df.select(wanted.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
   }
 

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's five query operations (list-groups, by-group, tail, seek,
   * info — reference query_cli.go:35-51), re-expressed as lazy
@@ -34,7 +35,9 @@ object Queries {
         max(timestamp_millis(col(Schema.Timestamp))).as("last_seen"),
         sum(col(Schema.IsCommand).cast("long")).as("commands"),
         sum(col(Schema.IsProgress).cast("long")).as("progress"))
-      .orderBy(col("first_seen").asc_nulls_last, col("name"))
+      // one row per group: sorted in one partition, no range shuffle
+      .coalesce(1)
+      .sortWithinPartitions(col("first_seen").asc_nulls_last, col("name"))
 
   /** P6: by-group — case-insensitive substring match on the normalized group
     * name; the empty group normalizes to "<no group>" BEFORE matching, so a
@@ -53,104 +56,71 @@ object Queries {
     case _                     => entries
   }
 
-  /** `line_no` restarts at 0 per source file, so a global row index needs
-    * the per-file counts (one tiny aggregate — a row per file, line_no is
-    * dense 0..c-1 by construction). Returns rows whose GLOBAL index (files
-    * in name order) is >= `start`, or an empty frame.
+  /** Rows whose GLOBAL index (files in `file` order, then `line_no`) is
+    * >= `start`, sorted in that order; empty when `start` is out of range.
     *
-    * Two shapes by file count (round-2 verdict: the OR-chain is degenerate
-    * at millions of files):
-    *   - few files: per-file `(file, line_no >= lo)` predicates OR-chained
-    *     — fully sargable, parquet row-group stats prune the scan;
-    *   - many files: per-file offsets stay a DataFrame, broadcast-joined
-    *     onto entries with one arithmetic filter. A coarse
-    *     `file >= firstWantedFile` predicate keeps scan pruning.
+    * Assumes `line_no` is dense 0..c-1 per file, as [[LogParser.parse]]
+    * and [[Cli.entriesWithLineNo]] make it, so one aggregate of
+    * max(line_no)+1 per file (one row per file, collected once) gives
+    * every file's row count. A prefix sum on the driver finds the file
+    * `f0` holding row `start` and the first wanted `line_no` within it;
+    * the rest is two sargable terms the Parquet scan can prune with,
+    * whatever the file count.
     */
-  private val OrChainMaxFiles = 64
-
   private def fromGlobalRow(entries: DataFrame, start: Long): DataFrame = {
+    if (start < 0) return entries.limit(0)
+    // Spark's string order (UTF-8 bytes, nulls first), not Java's UTF-16 one
     val counts = entries.groupBy(col(Schema.File))
-      .agg((max(col(Schema.LineNo)) + 1).as("__cnt"))
-
-    val nFiles = counts.count()
-    if (nFiles == 0) return entries.limit(0)
-
-    if (nFiles <= OrChainMaxFiles) {
-      val rows = counts.orderBy(Schema.File).collect()
-      var cum = 0L
-      val preds = rows.toSeq.flatMap { r =>
-        val f = r.getString(0)
-        val c = r.getLong(1)
-        val lo = start - cum // first wanted line_no within this file
-        cum += c
-        if (lo >= c) None
-        else if (lo <= 0) Some(col(Schema.File) === f)
-        else Some(col(Schema.File) === f && col(Schema.LineNo) >= lo)
-      }
-      if (preds.isEmpty) entries.limit(0)
-      else entries.filter(preds.reduce(_ || _)).orderBy(Schema.File, Schema.LineNo)
-    } else {
-      import org.apache.spark.sql.expressions.Window
-      // Two-level distributed prefix sum over the per-file counts (same
-      // shape as Packing.packSequences; fixes the r4-verdict nit where a
-      // single Window.orderBy(file) serialized all N_files rows through
-      // one partition — degenerate at ~10⁸ files): range-bucket the files
-      // (range partitions are ordered between buckets), window per bucket
-      // in parallel, then a running sum over ONE ROW PER BUCKET broadcast
-      // back. Persisted: the local windows and the bucket totals both
-      // read the bucketed counts, and the partition ids must be computed
-      // once.
-      val parts = operators.CacheRegistry.track(counts
-        .repartitionByRange(
-          counts.sparkSession.sparkContext.defaultParallelism, col(Schema.File))
-        .withColumn("__p", spark_partition_id())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val local = parts.withColumn("__lo",
-        sum(col("__cnt")).over(
-          Window.partitionBy("__p").orderBy(Schema.File)) - col("__cnt"))
-      val boff = parts.groupBy("__p").agg(sum(col("__cnt")).as("__pt"))
-        .withColumn("__poff",
-          coalesce(sum(col("__pt")).over(
-            Window.orderBy("__p").rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0L)))
-        .select("__p", "__poff")
-      val offsets = local.join(broadcast(boff), "__p")
-        .withColumn("__off", col("__lo") + col("__poff"))
-        .filter(col("__off") + col("__cnt") > start) // files wholly before `start` drop out
-        .select(col(Schema.File), col("__off"))
-      val firstFile = offsets.agg(min(col(Schema.File))).head()
-      if (firstFile.isNullAt(0)) return entries.limit(0)
-      entries
-        .filter(col(Schema.File) >= firstFile.getString(0)) // sargable coarse prune
-        .join(broadcast(offsets), Seq(Schema.File))
-        .filter(col("__off") + col(Schema.LineNo) >= start)
-        .drop("__off")
-        .orderBy(Schema.File, Schema.LineNo)
-    }
+      .agg((max(col(Schema.LineNo)) + 1).as("n")).collect()
+      .map(r => (Option(r.getString(0)), r.getLong(1)))
+      .sortBy(_._1.map(UTF8String.fromString))
+    val ends = counts.map(_._2).scanLeft(0L)(_ + _).tail
+    val i = ends.indexWhere(_ > start)
+    if (i < 0) return entries.limit(0)
+    val f0 = counts(i)._1.orNull
+    val lo = start - (ends(i) - counts(i)._2) // first wanted line_no in f0
+    val later = if (f0 == null) col(Schema.File).isNotNull else col(Schema.File) > f0
+    entries
+      .filter(later || (col(Schema.File) <=> lit(f0) && col(Schema.LineNo) >= lo))
+      .orderBy(Schema.File, Schema.LineNo)
   }
+
+  /** Above this many rows a limit counts its frame first: Spark's top-n
+    * (`orderBy … limit n`) sizes a buffer of 2n rows per partition up
+    * front, so a huge `n` on a small table would allocate gigabytes to
+    * return a few rows.
+    */
+  private val TopNMax = 1 << 20
+
+  /** `df.limit(n)` for a Long `n`: negative counts as 0, and no limit is
+    * set when `n` is 2^31 or more (no frame that large can be collected)
+    * or, past [[TopNMax]], when the frame has no more than `n` rows.
+    */
+  private def limitRows(df: DataFrame, n: Long): DataFrame =
+    if (n >= Int.MaxValue || (n > TopNMax && n >= df.count())) df
+    else df.limit(math.max(n, 0L).toInt)
 
   /** O3: tail — last `n` rows in global (file, line_no) order
-    * (reference query_cli.go:311-348). Multi-file aware: `line_no` restarts
-    * per file (advisor finding, round 1), so the cutoff is translated into
-    * per-file predicates instead of one global line_no threshold.
+    * (reference query_cli.go:311-348): `orderBy(file desc, line_no
+    * desc).limit(n)`, which Spark plans as one bounded top-n job, re-sorted
+    * ascending. Needs no row counts, so it is right on any frame, filtered
+    * ones included; `n <= 0` gives an empty frame.
     */
-  def tail(entries: DataFrame, n: Long): DataFrame = {
-    val totalRow = entries.groupBy(col(Schema.File))
-      .agg((max(col(Schema.LineNo)) + 1).as("__cnt"))
-      .agg(sum(col("__cnt"))).head()
-    if (totalRow.isNullAt(0)) return entries.limit(0) // empty input
-    val total = totalRow.getLong(0)
-    fromGlobalRow(entries, math.max(0, total - n))
-  }
+  def tail(entries: DataFrame, n: Long): DataFrame =
+    limitRows(entries.orderBy(col(Schema.File).desc, col(Schema.LineNo).desc), n)
+      .orderBy(Schema.File, Schema.LineNo)
 
   /** O4/S9: seek — stream from global row `k`, optional limit
-    * (reference query_cli.go:352-373). Out-of-range `k` yields an empty
-    * frame (the reference errors, query.go:429-433; flagging over aborting
-    * is the distributed-friendly choice, SURVEY.md §7.4).
+    * (reference query_cli.go:352-373): one per-file count aggregate, then
+    * a two-term predicate; with a limit the sort is one top-n job.
+    * Assumes `line_no` is dense per file, as parsed or read. Out-of-range
+    * `k` (negative, or at or past the end) yields an empty frame (the
+    * reference errors, query.go:429-433; flagging over aborting is the
+    * distributed-friendly choice, SURVEY.md §7.4).
     */
   def seek(entries: DataFrame, k: Long, limit: Option[Long] = None): DataFrame = {
     val df = fromGlobalRow(entries, k)
-    limit.fold(df)(n => df.limit(n.toInt))
+    limit.fold(df)(limitRows(df, _))
   }
 
   /** A2: whole-file processing summary (reference cmd/bklog/main.go:32-40). */
