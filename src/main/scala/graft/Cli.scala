@@ -1605,6 +1605,8 @@ object Cli {
     val t0 = System.nanoTime()
     lazy val entries = ParquetIO.read(spark, file)
     def queryMs = (System.nanoTime() - t0) / 1e6
+    // from the footers: no count job over the table
+    def totalRows = ParquetIO.fileInfo(spark, file).rowCount
 
     op match {
       case "info" =>
@@ -1617,7 +1619,7 @@ object Cli {
       case "list-groups" =>
         val groups = Queries.listGroups(entries).collect()
         if (json) {
-          val total = if (stats) entries.count() else 0L
+          val total = if (stats) totalRows else 0L
           println(jsonEnvelope("groups", groups.toIndexedSeq.map(groupJsonFields),
             Seq("total_entries" -> total.toString,
               "total_groups" -> (if (stats) groups.length else 0).toString,
@@ -1626,7 +1628,7 @@ object Cli {
           print(formatGroupsTable(groups.toIndexedSeq))
           if (stats) {
             println("\n--- Query Statistics (Streaming) ---")
-            println(s"Total entries: ${entries.count()}")
+            println(s"Total entries: $totalRows")
             println(s"Total groups: ${groups.length}")
             println(f"Query time: $queryMs%.2f ms")
           }
@@ -1639,7 +1641,7 @@ object Cli {
         val shown = limit.map(matchedDf.limit).getOrElse(matchedDf).collect()
         val matched = shown.length
         if (json) {
-          val total = if (stats) entries.count() else 0L
+          val total = if (stats) totalRows else 0L
           println(jsonEnvelope("entries", shown.toIndexedSeq.map(entryJsonFields),
             Seq("total_entries" -> total.toString,
               "matched_entries" -> (if (stats) matched else 0).toString,
@@ -1651,7 +1653,7 @@ object Cli {
           else shown.foreach(r => println(formatEntryWithMarkers(r)))
           if (stats) {
             println("\n--- Query Statistics (Streaming) ---")
-            println(s"Total entries: ${entries.count()}")
+            println(s"Total entries: $totalRows")
             println(s"Matched entries: $matched")
             println(f"Query time: $queryMs%.2f ms")
           }
@@ -1661,7 +1663,7 @@ object Cli {
         val n = flags.get("tail").map(_.toLong).filter(_ > 0).getOrElse(10L)
         val rows = Queries.tail(entriesWithLineNo(entries), n).collect()
         if (json) {
-          val total = if (stats) entries.count() else 0L
+          val total = if (stats) totalRows else 0L
           println(jsonEnvelope("entries", rows.toIndexedSeq.map(entryJsonFields),
             Seq("total_rows" -> total.toString,
               "entries_shown" -> (if (stats) rows.length else 0).toString,
@@ -1671,7 +1673,7 @@ object Cli {
           rows.foreach(r => println(formatEntryWithMarkers(r)))
           if (stats) {
             println("\n--- Tail Statistics ---")
-            println(s"Total rows in file: ${entries.count()}")
+            println(s"Total rows in file: $totalRows")
             println(s"Entries shown: ${rows.length}")
             println(f"Query time: $queryMs%.2f ms")
           }

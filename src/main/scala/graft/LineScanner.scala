@@ -4,11 +4,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Ansi
 
-/** Byte-level single-line scanner shared by the fast ingest path
-  * ([[LogParser.parse]]) — the Scala counterpart of the Catalyst expression
-  * pipeline in [[LogParser.parseLines]], with identical semantics
-  * (reference scanner.go:18-71, parser.go:41-56; both paths are held equal
-  * row-for-row by LogParserSpec/FixtureSpec).
+/** Byte-level single-line scanner of the ingest path ([[LogParser.parse]])
+  * (reference scanner.go:18-71, parser.go:41-56). The specs hold it equal
+  * row-for-row to a Catalyst-expression oracle of the same semantics
+  * (`ParseOracle` in the test sources).
   */
 object LineScanner {
 

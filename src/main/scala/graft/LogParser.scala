@@ -4,43 +4,37 @@ import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.hadoop.mapreduce.InputSplit
 import org.apache.hadoop.mapreduce.lib.input.{FileSplit, TextInputFormat}
 import org.apache.spark.TaskContext
-import org.apache.spark.rdd.NewHadoopRDD
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.rdd.{NewHadoopRDD, RDD}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graft.Shims
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-
-import graft.functions.GraftFunctions.strip_ansi
 
 /** Buildkite log → entries DataFrame.
   *
-  * Declarative re-expression of the reference's scan pipeline
-  * (reference parser.go:41-56, scanner.go:18-71): OSC timestamp split,
-  * classification flags, and the order-sensitive group carry-forward — all as
-  * Catalyst column expressions (codegen'd, no UDFs; the one non-built-in is
-  * the [[graft.functions.StripAnsi]] native expression).
+  * Distributed re-expression of the reference's one-pass scan
+  * (reference parser.go:41-56, scanner.go:18-71): each input split is
+  * streamed through the byte-level [[LineScanner]] (OSC timestamp split,
+  * classification flags), and the order-sensitive group carry-forward runs
+  * per split with a prefix patched in.
   *
-  * Order is pinned by `(file, offset)` where `offset` is the byte position of
-  * each line's start within its file (from Hadoop's TextInputFormat record
-  * key) — deterministic across partitionings, unlike
+  * Order is pinned by `(file, line_no)`: `line_no` is the dense 0-based
+  * line index within its file, deterministic across partitionings, unlike
   * `monotonically_increasing_id`.
   *
   * The carry-forward is a **parallel prefix scan**: files are read as
-  * byte-range splits; each split's window runs independently, and a tiny
-  * boundary table (one row per split: line count + last group header)
-  * propagates the prefix — cumulative line offset and initial group — via a
-  * window over splits. A single 1 TB log file therefore parallelizes across
-  * all its splits instead of serializing through one partition; the price is
-  * one extra (fully parallel) pass to build the boundary table.
+  * byte-range splits; a split's prefix — the number of lines before it and
+  * the last group header before it, in the same file — comes from the
+  * boundary facts (line count + last header) of the earlier splits of that
+  * file. A single 1 TB log file therefore parallelizes across all its
+  * splits instead of serializing through one partition; the price is one
+  * extra pass over every split that another split of its file follows.
   */
 object LogParser {
 
   /** `ESC _bk;t=` — 7 chars, all ASCII (reference scanner.go:74-81). */
   val OscPrefix = "\u001b_bk;t="
-  private val Bel = "\u0007"
 
   /** Default max input-split size for log files. CI logs are small-ish
     * files; 32 MB keeps task counts sane at fleet scale while still cutting
@@ -48,53 +42,13 @@ object LogParser {
     */
   val DefaultSplitMaxBytes: Long = 32L * 1024 * 1024
 
-  private val linesSchema = StructType(Seq(
-    StructField(Schema.File, StringType, nullable = false),
-    StructField("offset", LongType, nullable = false),
-    StructField("value", StringType, nullable = false),
-    StructField("__split", IntegerType, nullable = false),
-  ))
-
-  /** Read text lines with their source file, byte offset, and input-split
-    * id.
-    *
-    * Splits strictly on `\n` (a lone `\r` is NOT a record delimiter, matching
-    * Go's `bufio.ScanLines`; progress lines legitimately embed `\r`). The
-    * single trailing `\r` of CRLF files is removed in [[parseLines]].
-    * TextInputFormat assigns every line to exactly one byte-range split
-    * (a line spanning a boundary belongs to the split containing its start).
-    */
-  def readLines(spark: SparkSession, path: String,
-      splitMaxBytes: Long = DefaultSplitMaxBytes): DataFrame = {
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    conf.set("textinputformat.record.delimiter", "\n")
-    conf.setLong("mapreduce.input.fileinputformat.split.maxsize", splitMaxBytes)
-    val rdd = spark.sparkContext.newAPIHadoopFile(
-      path, classOf[TextInputFormat], classOf[LongWritable], classOf[Text], conf)
-    val rows = rdd.asInstanceOf[NewHadoopRDD[LongWritable, Text]]
-      .mapPartitionsWithInputSplit(
-        (split: InputSplit, it: Iterator[(LongWritable, Text)]) => {
-          // Emit catalyst InternalRows directly: Text's UTF-8 bytes go
-          // straight into UTF8String (no String decode/encode round-trip)
-          // and ingestion skips the public-API per-row converter pass.
-          val file = UTF8String.fromString(
-            split.asInstanceOf[FileSplit].getPath.toString)
-          val splitId = TaskContext.getPartitionId()
-          it.map { case (off, text) =>
-            // Text buffers are reused by the reader: copy the bytes now.
-            val bytes = java.util.Arrays.copyOf(text.getBytes, text.getLength)
-            InternalRow(file, off.get(), UTF8String.fromBytes(bytes), splitId)
-          }
-        },
-        preservesPartitioning = true)
-    Shims.internalCreateDataFrame(spark, rows, linesSchema)
-  }
-
-  /** Lines DF `(file, offset, value, __split)` → parsed entries DF
-    * ([[Schema.parsedSchema]]).
+  /** Full pipeline: log file(s) at `path` (a path, glob, or comma-separated
+    * list) → entries DataFrame ([[Schema.parsedSchema]]), via [[parseFast]].
     *
     * Semantics (golden-tested against the reference test tables):
+    *   - splits strictly on `\n` (a lone `\r` is NOT a record delimiter,
+    *     matching Go's `bufio.ScanLines`; progress lines legitimately embed
+    *     `\r`); the single trailing `\r` of CRLF lines is removed;
     *   - a line shorter than 10 bytes, without the OSC prefix, or without a
     *     BEL terminator passes through unchanged with a null timestamp
     *     (reference scanner.go:22-51);
@@ -106,99 +60,16 @@ object LogParser {
     *     content; header lines belong to their own group; lines before any
     *     header get "" (reference parser.go:41-56).
     */
-  def parseLines(lines: DataFrame): DataFrame = {
-    val raw = when(col("value").endsWith("\r"),
-      expr("substring(value, 1, length(value) - 1)")).otherwise(col("value"))
-
-    val parsed = lines
-      .withColumn("__raw", raw)
-      // First BEL; OSC prefix is 7 ASCII chars so char position == byte position.
-      .withColumn("__bel", locate(Bel, col("__raw")))
-      .withColumn("__osc",
-        col("__raw").startsWith(OscPrefix) && col("__bel") > 0 &&
-          octet_length(col("__raw")) >= 10)
-      .withColumn("__ts_str",
-        when(col("__osc"), expr("substring(__raw, 8, __bel - 8)")))
-      // try_cast trims whitespace; Go's strconv.ParseInt (and LineScanner)
-      // does not — gate on digits-only so ' 123' is a parse_error in both
-      // paths (advisor finding, round 1)
-      .withColumn(Schema.Timestamp,
-        when(col("__ts_str").rlike("^[+-]?[0-9]+$"),
-          expr("try_cast(__ts_str as bigint)")))
-      .withColumn(Schema.ParseError,
-        col("__osc") && col(Schema.Timestamp).isNull)
-      .withColumn(Schema.Content,
-        when(col("__osc") && !col(Schema.ParseError),
-          expr("substring(__raw, __bel + 1)")).otherwise(col("__raw")))
-      .withColumn("__clean", strip_ansi(col(Schema.Content)))
-      .withColumn(Schema.HasTimestamp, col(Schema.Timestamp).isNotNull)
-      .withColumn(Schema.IsCommand, col("__clean").startsWith("$ "))
-      .withColumn(Schema.IsGroup,
-        col("__clean").startsWith("~~~") || col("__clean").startsWith("---") ||
-          col("__clean").startsWith("+++"))
-      // [K is checked on the RAW content, the keywords on the clean content
-      // (reference parser.go:152-165).
-      .withColumn(Schema.IsProgress,
-        col(Schema.Content).contains("[K") &&
-          (col("__clean").contains("objects") ||
-            col("__clean").contains("deltas") ||
-            col("__clean").contains("%")))
-
-    // ---- parallel prefix scan over splits ----
-    // Pass A: one row per (file, split): line count + the header with the
-    // greatest offset (max of a (offset, clean) struct; null when the split
-    // has no header).
-    val boundary = parsed
-      .groupBy(col(Schema.File), col("__split"))
-      .agg(
-        count(lit(1)).as("__cnt"),
-        max(when(col(Schema.IsGroup), struct(col("offset"), col("__clean"))))
-          .as("__last_hdr"))
-    // Prefix per split: lines before this split, and the most recent header
-    // of any earlier split in the same file. Window over #splits rows only.
-    val wb = Window.partitionBy(Schema.File).orderBy("__split")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val prefixes = boundary.select(
-      col(Schema.File), col("__split"),
-      coalesce(sum(col("__cnt")).over(wb), lit(0L)).as("__line_off"),
-      last(col("__last_hdr.__clean"), ignoreNulls = true).over(wb).as("__init_grp"))
-
-    // Pass B: per-split windows (parallelism = #splits), prefix patched in.
-    val w = Window.partitionBy(col(Schema.File), col("__split")).orderBy("offset")
-    val cumulative = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    parsed
-      .join(broadcast(prefixes), Seq(Schema.File, "__split"))
-      .withColumn(Schema.LineNo,
-        col("__line_off") + row_number().over(w).cast(LongType) - 1)
-      .withColumn(Schema.Group,
-        coalesce(
-          last(when(col(Schema.IsGroup), col("__clean")), ignoreNulls = true)
-            .over(cumulative),
-          col("__init_grp"),
-          lit("")))
-      .select(Schema.parsedSchema.fieldNames.map(col).toSeq: _*)
-  }
-
-  /** Full pipeline: log file(s) at `path` → entries DataFrame.
-    *
-    * Uses the fast two-pass byte-scanner ingest ([[parseFast]]): identical
-    * semantics to the Catalyst pipeline (held equal row-for-row by the
-    * specs), with zero shuffles — the per-partition stamping replaces the
-    * window machinery entirely.
-    */
   def parse(spark: SparkSession, path: String,
       splitMaxBytes: Long = DefaultSplitMaxBytes): DataFrame =
     parseFast(spark, path, splitMaxBytes)
 
-  /** Catalyst-expression variant of the full pipeline — the composable /
-    * declarative path (used when the input is already a lines DataFrame,
-    * e.g. from another source).
+  /** `(byte offset, line)` records of the files at `path`, one partition per
+    * byte-range input split of at most `splitMaxBytes`. TextInputFormat
+    * assigns every line to exactly one split (a line spanning a boundary
+    * belongs to the split containing its start).
     */
-  def parseExpr(spark: SparkSession, path: String,
-      splitMaxBytes: Long = DefaultSplitMaxBytes): DataFrame =
-    parseLines(readLines(spark, path, splitMaxBytes))
-
-  private def hadoopLines(spark: SparkSession, path: String, splitMaxBytes: Long) = {
+  private[graft] def hadoopLines(spark: SparkSession, path: String, splitMaxBytes: Long) = {
     val conf = new org.apache.hadoop.conf.Configuration(
       spark.sparkContext.hadoopConfiguration)
     conf.set("textinputformat.record.delimiter", "\n")
@@ -221,23 +92,29 @@ object LogParser {
   /** Fast ingest: reference-style per-partition byte scanning, made
     * distributed by the split-boundary prefix pass.
     *
-    * Pass A streams each split once collecting (line count, last group
-    * header) — a header probe that touches only candidate lines. The driver
-    * folds these into per-split prefixes (start line number, initial
-    * group). Pass B re-streams each split emitting finished catalyst rows.
-    * No shuffle, no sort, no window: aggregate throughput scales with
-    * splits × per-core scanner speed.
+    * Pass A streams each split that a later split of the same file follows,
+    * collecting (line count, last group header) — a header probe that
+    * touches only candidate lines. The last split of each file needs no
+    * probe (nothing depends on it), so when every file is one split, i.e.
+    * every log is at most `splitMaxBytes`, pass A runs no job at all and
+    * each log is read once. The
+    * driver folds the facts into per-split prefixes (start line number,
+    * initial group), in partition order. Pass B streams every split,
+    * emitting finished catalyst rows. No shuffle, no sort, no window:
+    * aggregate throughput scales with splits × per-core scanner speed.
     */
   def parseFast(spark: SparkSession, path: String,
       splitMaxBytes: Long = DefaultSplitMaxBytes): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    val lines = hadoopLines(spark, path, splitMaxBytes)
+    val files = lines.partitions.map(Shims.hadoopSplitFile)
+    val lastSplitOf = files.zipWithIndex.toMap
+    val probed = files.indices.filter(i => lastSplitOf(files(i)) != i)
 
-    // Pass A: per-split boundary facts.
-    val boundaries = hadoopLines(spark, path, splitMaxBytes)
-      .mapPartitionsWithInputSplit(
-        (split: InputSplit, it: Iterator[(LongWritable, Text)]) => {
-          val file = split.asInstanceOf[FileSplit].getPath.toString
-          val pid = TaskContext.getPartitionId()
+    // Pass A: boundary facts of the probed splits.
+    val facts =
+      if (probed.isEmpty) Map.empty[Int, (Long, Array[Byte])]
+      else probed.zip(spark.sparkContext.runJob(lines,
+        (it: Iterator[(LongWritable, Text)]) => {
           var count = 0L
           var lastHdr: Array[Byte] = null
           it.foreach { case (_, text) =>
@@ -246,29 +123,28 @@ object LogParser {
             var len = text.getLength
             if (len > 0 && buf(len - 1) == '\r') len -= 1
             val h = LineScanner.headerCleanOrNull(buf, len)
-            if (h != null) lastHdr = h.getBytes
+            // copy: `h` may alias the reader's reused line buffer
+            if (h != null) lastHdr = h.copy().getBytes
           }
-          Iterator.single((pid, file, count, lastHdr))
-        },
-        preservesPartitioning = true)
-      .collect()
-      .sortBy(_._1)
+          (count, lastHdr)
+        }, probed)).toMap
 
     // Driver fold: per-file running (line offset, current group).
     val lineOff = scala.collection.mutable.Map.empty[String, Long]
     val grp = scala.collection.mutable.Map.empty[String, Array[Byte]]
-    val prefixes: Map[Int, (Long, Array[Byte])] = boundaries.map {
-      case (pid, file, count, lastHdr) =>
-        val off = lineOff.getOrElse(file, 0L)
-        val init = grp.getOrElse(file, null)
-        lineOff(file) = off + count
+    val prefixes: Array[(Long, Array[Byte])] = files.indices.map { i =>
+      val file = files(i)
+      val prefix = (lineOff.getOrElse(file, 0L), grp.getOrElse(file, null))
+      facts.get(i).foreach { case (count, lastHdr) =>
+        lineOff(file) = prefix._1 + count
         if (lastHdr != null) grp(file) = lastHdr
-        pid -> ((off, init))
-    }.toMap
+      }
+      prefix
+    }.toArray
     val bc = spark.sparkContext.broadcast(prefixes)
 
     // Pass B: emit finished rows with running group state per split.
-    val rows = hadoopLines(spark, path, splitMaxBytes)
+    val rows = lines
       .mapPartitionsWithInputSplit(
         (split: InputSplit, it: Iterator[(LongWritable, Text)]) => {
           val fileU8 = UTF8String.fromString(
@@ -291,31 +167,7 @@ object LogParser {
           }
         },
         preservesPartitioning = true)
-      .asInstanceOf[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]
+      .asInstanceOf[RDD[InternalRow]]
     Shims.internalCreateDataFrame(spark, rows, Schema.parsedSchema)
   }
-
-  /** Typed view for Dataset-API consumers. */
-  def parseTyped(spark: SparkSession, path: String): Dataset[LogEntry] = {
-    implicit val enc: Encoder[LogEntry] = Encoders.product[LogEntry]
-    parse(spark, path).as[LogEntry]
-  }
-}
-
-/** Typed entry row — the Scala analogue of the reference's LogEntry/
-  * ParquetLogEntry structs (reference parser.go:12-17, query.go:20-28),
-  * with the engine's extra order/provenance columns.
-  */
-case class LogEntry(
-    timestamp: Option[Long],
-    content: String,
-    group: String,
-    has_timestamp: Boolean,
-    is_command: Boolean,
-    is_group: Boolean,
-    is_progress: Boolean,
-    file: String,
-    line_no: Long,
-    parse_error: Boolean) {
-  def cleanContent: String = graft.functions.Ansi.strip(content)
 }

@@ -1,7 +1,15 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shims
 
 /** Parquet sink/source for entry tables.
   *
@@ -150,14 +158,50 @@ object ParquetIO {
   /** S8: read an entry parquet (ours or the reference's). Column pruning and
     * predicate pushdown are Catalyst-native — the reference always reads all
     * columns (query.go:146); we get pruning for free.
+    *
+    * Runs no Spark job: the schema comes from the first data file's footer,
+    * read on the driver as the reference client does (query.go:56-61) and
+    * converted with Spark's own Parquet converter — the file and the types
+    * Spark's schema inference would pick without schema merging, minus the
+    * inference job.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path) // resolves the path and footer schema once
+    val conf = spark.sparkContext.hadoopConfiguration
+    val first = dataFiles(conf, path).headOption.getOrElse(
+      throw new IllegalArgumentException(s"no Parquet data files in $path"))
+    val footer = new Footer(first.getPath, readFooter(conf, first))
+    val df = spark.read.schema(Shims.parquetFooterSchema(spark, footer)).parquet(path)
     val available = df.schema.fieldNames.toSet
     val wanted = Schema.parsedSchema.fields.filter(f => available.contains(f.name))
     require(available.contains(Schema.Timestamp) && available.contains(Schema.Content),
       s"required columns timestamp/content missing in $path")  // query.go:228-231
     df.select(wanted.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
+  }
+
+  /** The data files of a table: each file `path` (a path or a glob, as
+    * `spark.read.parquet` takes) matches, and the visible files (names not
+    * starting with `_` or `.`, so no `_SUCCESS` or checksum files) of each
+    * directory it matches, sorted by path as Spark's schema inference sorts
+    * them.
+    */
+  private def dataFiles(conf: Configuration, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val matched = fs.globStatus(p)
+    if (matched == null || matched.isEmpty)
+      throw new java.io.FileNotFoundException(s"Path does not exist: $path")
+    matched.toSeq.flatMap { st =>
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filter { f =>
+        val name = f.getPath.getName
+        f.isFile && !name.startsWith("_") && !name.startsWith(".")
+      }
+    }.sortBy(_.getPath.toString)
+  }
+
+  private def readFooter(conf: Configuration, st: FileStatus): ParquetMetadata = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+    try reader.getFooter finally reader.close()
   }
 
   /** Bucketed parquet table write — the storage-side half of co-located
@@ -232,30 +276,13 @@ object ParquetIO {
   case class FileInfo(rowCount: Long, columnCount: Int, fileSize: Long, numRowGroups: Int)
 
   def fileInfo(spark: SparkSession, path: String): FileInfo = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val statuses =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet")).toSeq
-      else Seq(fs.getFileStatus(p))
-    var rows = 0L
-    var groups = 0
-    var size = 0L
-    var cols = 0
-    statuses.foreach { st =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-      try {
-        val footer = reader.getFooter
-        rows += reader.getRecordCount
-        groups += footer.getBlocks.size()
-        cols = footer.getFileMetaData.getSchema.getFieldCount
-        size += st.getLen
-      } finally reader.close()
-    }
-    FileInfo(rows, cols, size, groups)
+    val files = dataFiles(conf, path)
+    val footers = files.map(readFooter(conf, _))
+    FileInfo(
+      rowCount = footers.map(_.getBlocks.asScala.map(_.getRowCount).sum).sum,
+      columnCount = footers.lastOption.fold(0)(_.getFileMetaData.getSchema.getFieldCount),
+      fileSize = files.map(_.getLen).sum,
+      numRowGroups = footers.map(_.getBlocks.size).sum)
   }
 }

@@ -2,9 +2,10 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.{Column, SparkSession}
 
-/** Bridge to `private[sql]` pieces of Spark 4's Column API.
+/** Bridge to `private[sql]` / `private[spark]` pieces of Spark 4.
   *
   * Spark 4 unified `Column` around ColumnNode and made the
   * Expression⇄Column converters `private[sql]`; living under
@@ -34,4 +35,22 @@ object Shims {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
+
+  /** The Spark schema of a Parquet footer, converted as Spark's own schema
+    * inference converts it: the session's Parquet settings (binary as
+    * string, INT96 as timestamp, ...) and Spark's row metadata key when the
+    * writer left one.
+    */
+  def parquetFooterSchema(
+      spark: SparkSession,
+      footer: org.apache.parquet.hadoop.Footer): org.apache.spark.sql.types.StructType =
+    ParquetFileFormat.readSchemaFromFooter(footer, new ParquetToSparkSchemaConverter(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf))
+
+  /** The file an input split of a `newAPIHadoopFile` RDD reads, known on the
+    * driver (`NewHadoopPartition` is `private[spark]`).
+    */
+  def hadoopSplitFile(p: org.apache.spark.Partition): String =
+    p.asInstanceOf[org.apache.spark.rdd.NewHadoopPartition].serializableHadoopSplit.value
+      .asInstanceOf[org.apache.hadoop.mapreduce.lib.input.FileSplit].getPath.toString
 }

@@ -150,6 +150,36 @@ class CliSpec extends AnyFunSuite {
     assert(seek.contains("\"entries_shown\": 4"))
   }
 
+  test("query -stats totals come from the footers, without an extra job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cli-stats")
+    val log = dir.resolve("job.log")
+    java.nio.file.Files.write(log, (0 until 25).map {
+      case i if i % 10 == 0 => s"~~~ Section $i\n"
+      case i => s"line $i\n"
+    }.mkString.getBytes("UTF-8"))
+    val table = dir.resolve("entries").toString
+    ParquetIO.write(LogParser.parse(spark, log.toString), table)
+    def run(op: Map[String, String], stats: Boolean): (String, Int) =
+      TestSpark.jobsOf(captureOut {
+        Cli.runQuery(spark, Map("file" -> table) ++ op ++
+          (if (stats) Map("stats" -> "true") else Map.empty))
+      })
+    val json = Map("format" -> "json")
+    val cases = Seq(
+      Map("op" -> "list-groups") -> "Total entries: 25",
+      (Map("op" -> "list-groups") ++ json) -> "\"total_entries\": 25",
+      Map("op" -> "by-group", "group" -> "section") -> "Total entries: 25",
+      (Map("op" -> "by-group", "group" -> "section") ++ json) -> "\"total_entries\": 25",
+      Map("op" -> "tail", "tail" -> "3") -> "Total rows in file: 25",
+      (Map("op" -> "tail", "tail" -> "3") ++ json) -> "\"total_rows\": 25")
+    for ((op, total) <- cases) {
+      val (out, jobs) = run(op, stats = true)
+      assert(out.contains(total), s"$op:\n$out")
+      val (_, plainJobs) = run(op, stats = false)
+      assert(jobs == plainJobs, s"$op: $jobs jobs with -stats, $plainJobs without")
+    }
+  }
+
   test("parse file-XOR-api validation (main.go:119-141)") {
     val e1 = intercept[Cli.CliError](Cli.runParse(spark, Map.empty))
     assert(e1.getMessage.contains("Must provide either -file or API parameters"))

@@ -49,7 +49,7 @@ class FixtureSpec extends AnyFunSuite {
     // 4 KB splits force the prefix scan to stitch many boundaries
     val fast = LogParser.parseFast(spark, logPath, splitMaxBytes = 4096)
       .orderBy("line_no").collect()
-    val exprP = LogParser.parseExpr(spark, logPath, splitMaxBytes = 4096)
+    val exprP = ParseOracle.parseExpr(spark, logPath, splitMaxBytes = 4096)
       .orderBy("line_no").collect()
     assert(fast.length == 212 && exprP.length == 212)
     fast.zip(exprP).zipWithIndex.foreach { case ((a, b), i) =>

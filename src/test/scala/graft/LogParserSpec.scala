@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,14 +11,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * group_test.go:8-41 (carry-forward), scanner_test.go:137-167 (edge cases).
   */
 class LogParserSpec extends AnyFunSuite {
-  import TestSpark.{spark, linesDF}
+  import TestSpark.{spark, linesDF, jobTasksOf}
 
   private val Esc = ""
   private val Bel = ""
   private def osc(ts: String, content: String) = s"${Esc}_bk;t=$ts$Bel$content"
 
   private def parseOne(line: String): Row =
-    LogParser.parseLines(linesDF(Seq(line))).head()
+    ParseOracle.parseLines(linesDF(Seq(line))).head()
 
   private def field(r: Row, name: String): Any = r.get(r.fieldIndex(name))
 
@@ -75,7 +77,7 @@ class LogParserSpec extends AnyFunSuite {
       osc("123", s"content${Bel}more"), // multiple BEL: content keeps the rest
       osc("9999999999999", "content"), // 13-digit timestamp
     )
-    val rows = LogParser.parseLines(linesDF(lines)).orderBy("line_no").collect()
+    val rows = ParseOracle.parseLines(linesDF(lines)).orderBy("line_no").collect()
     assert(rows.length == 5)
     assert(field(rows(0), "content") == "")
     assert(field(rows(1), "content") == "a")
@@ -108,7 +110,7 @@ class LogParserSpec extends AnyFunSuite {
       // keyword but no [K -> not progress
       (osc("1", "Counting objects: 50%"), (false, false, false)),
     )
-    val rows = LogParser.parseLines(linesDF(cases.map(_._1))).orderBy("line_no").collect()
+    val rows = ParseOracle.parseLines(linesDF(cases.map(_._1))).orderBy("line_no").collect()
     rows.zip(cases).foreach { case (r, (line, (cmd, grp, prog))) =>
       assert(field(r, "is_command") == cmd, s"is_command for $line")
       assert(field(r, "is_group") == grp, s"is_group for $line")
@@ -136,14 +138,14 @@ class LogParserSpec extends AnyFunSuite {
       "+++ :hammer: Example tests",
       "+++ :hammer: Example tests",
     )
-    val got = LogParser.parseLines(linesDF(lines))
+    val got = ParseOracle.parseLines(linesDF(lines))
       .orderBy("line_no").select("group").collect().map(_.getString(0)).toSeq
     assert(got == expected)
   }
 
   test("lines before any header get empty group") {
     val lines = Seq("preamble one", "preamble two", osc("5", "~~~ Start"), "in group")
-    val got = LogParser.parseLines(linesDF(lines))
+    val got = ParseOracle.parseLines(linesDF(lines))
       .orderBy("line_no").select("group").collect().map(_.getString(0)).toSeq
     assert(got == Seq("", "", "~~~ Start", "~~~ Start"))
   }
@@ -151,7 +153,7 @@ class LogParserSpec extends AnyFunSuite {
   test("carry-forward and line_no are per-file") {
     val f1 = linesDF(Seq(osc("1", "~~~ A"), "a-line"), file = "f1")
     val f2 = linesDF(Seq("b-line", osc("2", "~~~ B")), file = "f2")
-    val got = LogParser.parseLines(f1.union(f2))
+    val got = ParseOracle.parseLines(f1.union(f2))
       .orderBy("file", "line_no")
       .select("file", "line_no", "group").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
@@ -161,7 +163,7 @@ class LogParserSpec extends AnyFunSuite {
   }
 
   test("CRLF: single trailing \\r is stripped, embedded \\r preserved") {
-    val rows = LogParser.parseLines(linesDF(Seq(
+    val rows = ParseOracle.parseLines(linesDF(Seq(
       "plain line\r",
       osc("7", "content with\rcarriage") + "\r",
     ))).orderBy("line_no").collect()
@@ -170,7 +172,7 @@ class LogParserSpec extends AnyFunSuite {
   }
 
   test("typed Dataset API round-trips the same entries") {
-    val ds = LogParser.parseTyped(spark, "/root/reference/testdata/bash-example.log")
+    val ds = ParseOracle.parseTyped(spark, "/root/reference/testdata/bash-example.log")
     val entries = ds.orderBy("line_no").collect()
     assert(entries.length == 212)
     assert(entries.count(_.is_command) == 15)
@@ -190,5 +192,75 @@ class LogParserSpec extends AnyFunSuite {
     assert(df.filter(col("is_command")).count() == 15L)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*("), plan)
+  }
+
+  /** A temp log file holding `lines`, each ended by `\n`. */
+  private def logFile(lines: Seq[String]): String = {
+    val f = Files.createTempDirectory("graft-split").resolve("t.log")
+    Files.write(f, lines.map(_ + "\n").mkString.getBytes("UTF-8"))
+    f.toString
+  }
+
+  /** 30 lines of 10 bytes: cut at 100 bytes, 3 splits of lines 0-10,
+    * 11-20 (no header) and 21-29 (a header at 25).
+    */
+  private val threeSplits = (0 until 30).map {
+    case 2 => "~~~ A...."
+    case 25 => "--- B...."
+    case i => f"line-$i%04d"
+  }
+
+  /** Parse `path` cut into `splits` splits of `splitMaxBytes` and require
+    * the single-split parse row for row, plus, per file, a dense `line_no`
+    * and the sequential carry-forward of `logs(file)`'s headers.
+    */
+  private def assertSplitInvariant(path: String, splitMaxBytes: Long, splits: Int,
+      logs: Map[String, Seq[String]]): Unit = {
+    val multi = LogParser.parse(spark, path, splitMaxBytes)
+    assert(multi.rdd.getNumPartitions == splits)
+    val single = LogParser.parse(spark, path)
+    assert(single.rdd.getNumPartitions == logs.size)
+    val got = multi.orderBy("file", "line_no").collect().toSeq
+    assert(got == single.orderBy("file", "line_no").collect().toSeq)
+    for ((file, lines) <- logs) {
+      val rows = got.filter(r => field(r, "file").toString.endsWith(file))
+      val groups = lines.scanLeft("") { (g, l) =>
+        if (Seq("~~~", "---", "+++").exists(l.startsWith)) l else g
+      }.tail
+      assert(rows.map(field(_, "line_no")) == lines.indices.map(_.toLong), file)
+      assert(rows.map(field(_, "content")) == lines, file)
+      assert(rows.map(field(_, "group")) == groups, file)
+    }
+  }
+
+  test("multi-split parse: header in the last split, a middle split without one") {
+    val path = logFile(threeSplits)
+    assertSplitInvariant(path, 100, 3, Map(path -> threeSplits))
+  }
+
+  test("multi-split parse: a line longer than a split leaves an empty split") {
+    val lines = Seq("~~~ A", "x" * 250, "l2", "--- B") ++
+      (4 until 30).map(i => f"line-$i%04d")
+    val path = logFile(lines)
+    // 526 bytes: splits start at 0, 100, ..., 500; the one at 100 lies
+    // inside the long line and holds no line start
+    assertSplitInvariant(path, 100, 6, Map(path -> lines))
+  }
+
+  test("multi-file parse of comma-separated paths: 1 split and 3 splits") {
+    val a = Seq("~~~ a....", "a-1", "+++ a-last")
+    val (pa, pb) = (logFile(a), logFile(threeSplits))
+    assertSplitInvariant(s"$pa,$pb", 100, 4, Map(pa -> a, pb -> threeSplits))
+  }
+
+  test("job counts: a one-split log parses and writes in 1 job; pass A skips last splits") {
+    val path = logFile(threeSplits)
+    val out = Files.createTempDirectory("graft-parse-jobs").resolve("e").toString
+    val (_, oneSplit) = jobTasksOf(ParquetIO.write(LogParser.parse(spark, path), out))
+    assert(oneSplit.length == 1, s"parse + write ran jobs of $oneSplit tasks")
+    assert(ParquetIO.read(spark, out).count() == 30L)
+    // 3 splits: pass A probes the first two only, in one job
+    val (_, passA) = jobTasksOf(LogParser.parse(spark, path, 100))
+    assert(passA == Seq(2), s"pass A ran jobs of $passA tasks")
   }
 }

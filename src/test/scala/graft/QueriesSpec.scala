@@ -1,20 +1,19 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Query-operation semantics against the parsed bash-example fixture
   * (reference query_test.go / query_seek_test.go / query_cli.go).
   */
 class QueriesSpec extends AnyFunSuite {
-  import TestSpark.{spark, linesDF}
+  import TestSpark.{spark, linesDF, jobsOf}
 
   private lazy val parsed =
     LogParser.parse(spark, "/root/reference/testdata/bash-example.log").cache()
@@ -38,7 +37,7 @@ class QueriesSpec extends AnyFunSuite {
 
   test("by-group: '<no group>' pattern selects ungrouped rows") {
     // query.go:343-348 — normalization happens BEFORE the match
-    val df = LogParser.parseLines(linesDF(Seq("pre1", "pre2", "~~~ G", "post")))
+    val df = ParseOracle.parseLines(linesDF(Seq("pre1", "pre2", "~~~ G", "post")))
     assert(Queries.byGroup(df, "no group").count() == 2L)
   }
 
@@ -109,35 +108,6 @@ class QueriesSpec extends AnyFunSuite {
 
   private def contents(df: DataFrame): Seq[String] =
     df.select("content").collect().map(_.getString(0)).toSeq
-
-  /** Spark jobs `body` starts, counted through a job-local property. A
-    * sentinel job with another tag runs after `body`; listener events
-    * arrive in order, so once it is seen every job of `body` has been.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val prop = "graft.test.jobs"
-    val tag = java.util.UUID.randomUUID().toString
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty(prop))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(prop, tag)
-      val out = body
-      sc.setLocalProperty(prop, tag + "-end")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 10000000000L
-      while (!seen.contains(tag + "-end") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(tag + "-end"), "listener never saw the sentinel job")
-      (out, seen.asScala.count(_ == tag))
-    } finally {
-      sc.setLocalProperty(prop, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("tail on a filtered frame returns that frame's last n rows") {
     // commands: a-l0, a-l3, a-l6, b-l0, b-l3; a cutoff taken from
@@ -221,11 +191,52 @@ class QueriesSpec extends AnyFunSuite {
     assert(e.getMessage.contains("timestamp/content missing"), e.getMessage)
   }
 
-  test("job counts: tail 1, seek with a limit <= 3, listGroups <= 2, ParquetIO.read <= 1") {
+  test("ParquetIO.read from one footer: single file, _SUCCESS and .crc, empty dir, legacy types") {
+    val base = Files.createTempDirectory("graft-footer").toString
+    // the schema Spark's own inference gives, projected as read projects it
+    def inferred(path: String) = {
+      val df = spark.read.parquet(path)
+      val wanted = Schema.parsedSchema.fields.filter(f => df.columns.contains(f.name))
+      df.select(wanted.map(f => col(f.name).cast(f.dataType)).toSeq: _*).schema
+    }
+    ParquetIO.write(entriesOf("a" -> 3, "b" -> 2), s"$base/t")
+    val names = new java.io.File(s"$base/t").list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(n => n.startsWith(".") && n.endsWith(".crc")),
+      names)
+    val dir = ParquetIO.read(spark, s"$base/t")
+    assert(dir.schema == inferred(s"$base/t"))
+    assert(contents(dir.orderBy(Schema.File, Schema.LineNo)) ==
+      Seq("a-l0", "a-l1", "a-l2", "b-l0", "b-l1"))
+    val part = s"$base/t/" + names.filter(_.endsWith(".parquet")).sorted.head
+    val file = ParquetIO.read(spark, part)
+    assert(file.schema == inferred(part))
+    assert(contents(file) == contents(spark.read.parquet(part)))
+    val glob = ParquetIO.read(spark, s"$base/t/part-*")
+    assert(glob.schema == inferred(s"$base/t/part-*"))
+    assert(glob.count() == 5L)
+
+    val empty = Files.createDirectory(java.nio.file.Paths.get(base, "empty"))
+    Files.createFile(empty.resolve("_SUCCESS"))
+    val e = intercept[IllegalArgumentException](ParquetIO.read(spark, empty.toString))
+    assert(e.getMessage.contains("no Parquet data files"), e.getMessage)
+    intercept[java.io.FileNotFoundException](ParquetIO.read(spark, s"$base/absent"))
+
+    entriesOf("a" -> 3)
+      .withColumn(Schema.Timestamp, (col(Schema.Timestamp) % 1000).cast("int"))
+      .withColumn(Schema.LineNo, col(Schema.LineNo).cast("int"))
+      .write.parquet(s"$base/legacy")
+    val legacy = ParquetIO.read(spark, s"$base/legacy")
+    assert(legacy.schema == inferred(s"$base/legacy"))
+    assert(legacy.schema(Schema.Timestamp).dataType == LongType)
+    assert(legacy.orderBy(Schema.LineNo).select(Schema.Timestamp, Schema.LineNo).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((0L, 0L), (1L, 1L), (2L, 2L)))
+  }
+
+  test("job counts: tail 1, seek with a limit <= 3, listGroups <= 2, ParquetIO.read 0") {
     val dir = Files.createTempDirectory("graft-jobs").toString + "/e"
     ParquetIO.write(entriesOf("a" -> 40, "b" -> 30), dir)
     val (e, readJobs) = jobsOf(ParquetIO.read(spark, dir))
-    assert(readJobs <= 1, s"ParquetIO.read ran $readJobs jobs")
+    assert(readJobs == 0, s"ParquetIO.read ran $readJobs jobs")
     val (t, tailJobs) = jobsOf(contents(Queries.tail(e, 5)))
     assert(t == (25 until 30).map(i => s"b-l$i"))
     assert(tailJobs == 1, s"tail ran $tailJobs jobs")
