@@ -192,27 +192,6 @@ object Cli {
 
   // ---- main ----
 
-  private def buildSession(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("bklog-spark")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // reclaim reliable-checkpoint FILES once their RDD becomes
-      // unreachable: the min-label CC loop's between-cut successors fall
-      // back to the previous checkpoint's files on executor loss, so they
-      // are deleted by the ContextCleaner, never eagerly
-      // (Lineage.release's deleteFiles contract)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s.sparkContext.setCheckpointDir(
-      CheckpointDirs.temp())
-    s
-  }
-
   private def parseFlags(args: Seq[String]): Map[String, String] =
     args.grouped(2).collect {
       case Seq(k, v) if k.startsWith("-") => k.stripPrefix("-") -> v
@@ -384,7 +363,9 @@ object Cli {
     }
     val cmd = args.head
     val flags = parseFlags(args.tail.toSeq)
-    val spark = buildSession()
+    // SPARK_MASTER points the CLI at a deployment; local[cpus] otherwise
+    val spark = Sessions.local(master = sys.env.get("SPARK_MASTER"),
+      logLevel = "ERROR")
     try cmd match {
       case "parse" => runParse(spark, flags)
       case "query" => runQuery(spark, flags)

@@ -4,19 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc scale sanity: 1.25 GB single-file parse + heavy-operator
-  * volumetrics at sf0.1. Not part of the driver contract.
+  * volumetrics over `sfDir`, whose `require` gates are sized at sf0.1.
+  * Run as `graft.Bench scale`; not part of the driver contract.
   */
 object ScaleCheck {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.sparkContext.setCheckpointDir(
-      CheckpointDirs.temp())
+  def run(spark: SparkSession, sfDir: String): Unit = {
     def time[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"[scale] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
@@ -53,7 +45,7 @@ object ScaleCheck {
     java.nio.file.Files.delete(tmp.resolve("big.log"))
 
     // ngram join volumetrics at sf0.1
-    val docs = Tables.load(spark, "/root/testdata/sf0.1", "documents")
+    val docs = Tables.load(spark, sfDir, "documents")
     val ex = operators.Dedup.withShingles(docs, 3)
       .select(col("doc_id"), explode_outer(col("__shingles")).as("sh"))
       .filter(col("sh").isNotNull) // Dedup.safeExplodeNote
@@ -292,7 +284,7 @@ object ScaleCheck {
     operators.CacheRegistry.release(spark)
     // embedding ops at 10× (20k vectors): k-means assignment crossJoin and
     // the quantization projection must stay parallel
-    val emb = Tables.load(spark, "/root/testdata/sf0.1", "embeddings")
+    val emb = Tables.load(spark, sfDir, "embeddings")
     val emb10 = (0 until 10)
       .map(i => emb.withColumn("vec_id", col("vec_id") + lit(i * 1000000L)))
       .reduce(_ unionAll _)
@@ -383,7 +375,7 @@ object ScaleCheck {
     // raw vectors (the 100-TB claim is storage + pruned IO, not just
     // CPU), and a 2-of-32-probe scan must stay partition-pruned
     time("ivfadc sf0.1: build code index + 2-probe topk") {
-      val embBig = Tables.load(spark, "/root/testdata/sf0.1", "embeddings")
+      val embBig = Tables.load(spark, sfDir, "embeddings")
       val idx = tmp.resolve("ivfpq-scale").toString + "/ix"
       operators.Similarity.writeIvfPqIndex(embBig, idx, numCentroids = 32)
       val topk = operators.Similarity.ivfPqTopK(spark, idx,
@@ -397,7 +389,7 @@ object ScaleCheck {
       }
       val codeBytes = dirBytes(java.nio.file.Paths.get(idx))
       val rawBytes = dirBytes(java.nio.file.Paths.get(
-        "/root/testdata/sf0.1/embeddings.parquet"))
+        s"$sfDir/embeddings.parquet"))
       println(f"[scale] ivfadc code index MB: ${codeBytes / 1e6}%.1f " +
         f"vs raw embeddings MB: ${rawBytes / 1e6}%.1f " +
         f"(${codeBytes.toDouble / rawBytes * 100}%.0f%%)")
@@ -442,7 +434,7 @@ object ScaleCheck {
     // no code-table file scan appears anywhere in the executed plan,
     // and (b) the footer-derived masses equal a real count.
     time("ivf drift report: footer-only store mass (zero code-table scans)") {
-      val embBig = Tables.load(spark, "/root/testdata/sf0.1", "embeddings")
+      val embBig = Tables.load(spark, sfDir, "embeddings")
       val idx = tmp.resolve("ivfpq-scale").toString + "/ix" // written above
       val rep = operators.Similarity.ivfDriftReport(spark, idx,
         embBig.filter(col("vec_id") % 3 === 1))
@@ -486,7 +478,7 @@ object ScaleCheck {
     // mix-up) now FAILS the scale check instead of printing an unread
     // telemetry table.
     time("ann recall floors sf0.1 (ivf / ivfadc / pq pseudo+trained)") {
-      val embBig = Tables.load(spark, "/root/testdata/sf0.1", "embeddings")
+      val embBig = Tables.load(spark, sfDir, "embeddings")
       val qs = embBig.filter(col("vec_id") < 8)
       def recallBy(df: org.apache.spark.sql.DataFrame, keyCol: String): Map[Int, Double] =
         df.select(col(keyCol).cast("int"), col("recall_at_k").cast("double"))
@@ -540,7 +532,7 @@ object ScaleCheck {
     // reproduce the exact operator EXACTLY — the geometry-free
     // correctness law, the binaryRecall rf=full-width analogue.
     time("mutual-NN approx recall floor + exhaustive-probe law (2k vectors)") {
-      val embBig = Tables.load(spark, "/root/testdata/sf0.1", "embeddings")
+      val embBig = Tables.load(spark, sfDir, "embeddings")
       def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
         df.select(col("vec_id_a"), col("vec_id_b")).collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -837,7 +829,7 @@ object ScaleCheck {
     operators.CacheRegistry.release(spark)
     // binned quantiles over a 6M-row fact: shuffled bytes stay
     // groups x bins rows, the cumulative walk stays <=1024 rows/group
-    val li = Tables.load(spark, "/root/testdata/sf0.1", "lineitem")
+    val li = Tables.load(spark, sfDir, "lineitem")
     val li10 = (0 until 10)
       .map(i => li.withColumn("l_orderkey", col("l_orderkey") + lit(i * 100000000L)))
       .reduce(_ unionAll _)
@@ -876,7 +868,7 @@ object ScaleCheck {
     // global rank comes from range partitions, never a one-partition
     // window
     time("sorted-neighborhood 200k parts (window 8)") {
-      val part = Tables.load(spark, "/root/testdata/sf0.1", "part")
+      val part = Tables.load(spark, sfDir, "part")
       val part10 = (0 until 10)
         .map(i => part.withColumn("p_partkey", col("p_partkey") + lit(i * 10000000L)))
         .reduce(_ unionAll _)
@@ -965,7 +957,7 @@ object ScaleCheck {
     // not the store's age), (3) APPENDS are batch-local (a one-hour
     // trickle touches one window directory of thousands)
     time("sketch store 10x history: answer-sized, range-pruned serving, local appends") {
-      val ev01 = Tables.loadEvents(spark, "/root/testdata/sf0.1")
+      val ev01 = Tables.loadEvents(spark, sfDir)
       val monthNs = 31L * 24 * 3600 * 1000L * 1000000L
       val ev10 = (0 until 10).map(i =>
         ev01.withColumn("ts", col("ts") + lit(i * monthNs))
@@ -1114,7 +1106,7 @@ object ScaleCheck {
     }
     operators.CacheRegistry.release(spark)
     // events at 10x: funnel stage joins and the retention triangle
-    val ev = Tables.loadEvents(spark, "/root/testdata/sf0.1")
+    val ev = Tables.loadEvents(spark, sfDir)
     val ev10 = (0 until 10)
       .map(i => ev.withColumn("user_id", col("user_id") + lit(i * 1000000L))
         .withColumn("event_id", col("event_id") + lit(i * 100000000L)))
@@ -1130,11 +1122,11 @@ object ScaleCheck {
 
     // CDC at 10x: a 150k-row changelog (10 copies of orders, distinct
     // seq) applied over a 150k-key base snapshot
-    val cust = Tables.load(spark, "/root/testdata/sf0.1", "customer")
+    val cust = Tables.load(spark, sfDir, "customer")
     val cust10 = (0 until 10)
       .map(i => cust.withColumn("c_custkey", col("c_custkey") + lit(i * 1000000L)))
       .reduce(_ unionAll _)
-    val orders = Tables.load(spark, "/root/testdata/sf0.1", "orders")
+    val orders = Tables.load(spark, sfDir, "orders")
     val ch10 = (0 until 10)
       .map(i => orders
         .withColumn("o_custkey", col("o_custkey") + lit(i * 1000000L))
@@ -1196,7 +1188,7 @@ object ScaleCheck {
     }
 
     // BPE at sf0.1 corpus vocabulary (6 rounds, vocabulary-sized state)
-    val docsSf = Tables.load(spark, "/root/testdata/sf0.1", "documents")
+    val docsSf = Tables.load(spark, sfDir, "documents")
     time("bpe 6 merge rounds over sf0.1 vocabulary") {
       println("[scale] bpe merges: " +
         operators.Bpe.trainMerges(docsSf, rounds = 6).count())
@@ -1873,6 +1865,5 @@ object ScaleCheck {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(sdir))
     }
     operators.CacheRegistry.release(spark)
-    spark.stop()
   }
 }

@@ -118,11 +118,10 @@ object Retrieval {
       k1: Double = 1.25,
       b: Double = 0.75,
       logIdf: Boolean = true,
-      genDfCap: Option[Long] = None,
-      tfcPre: Option[DataFrame] = None): DataFrame = {
+      genDfCap: Option[Long] = None): DataFrame = {
     require(k >= 1 && k1 > 0 && b >= 0 && b <= 1)
     genDfCap.foreach(c => require(c >= 1, s"genDfCap must be >= 1, got $c"))
-    val (tfc, dl, stats, dft) = bm25Stats(docs, tfcPre)
+    val (tfc, dl, stats, dft) = bm25Stats(docs)
     // query-sized: distinct query terms with their corpus df, broadcast;
     // __w = 1.0 (x·1.0 is bit-identical to x, so the weighted pass is
     // byte-for-byte the classic BM25 here)
@@ -137,41 +136,24 @@ object Retrieval {
       .select("query_id", "doc_id", "bm25", "rank")
   }
 
-  /** The (doc_id, term, tf) posting table every BM25 statistic derives
-    * from — one tokenize pass + one partial-agg shuffle. Exposed (r21)
-    * so a caller serving SEVERAL retrieval queries over the same corpus
-    * can build it once (e.g. behind a lineage cut) and thread it through
-    * the `tfcPre` parameter of the public rankers — the classic
-    * build-the-inverted-index-once shape; with no `tfcPre` each call
-    * derives and persists its own, exactly as before.
-    */
-  def bm25Tfc(docs: DataFrame): DataFrame =
-    Parallelism.ensure(docs
-        .select(col("doc_id").cast("long").as("doc_id"), col("text")))
-      .select(col("doc_id"),
-        explode_outer(TextAnalysis.tokens(col("text"))).as("term"))
-      .filter(col("term").isNotNull) // Dedup.safeExplodeNote
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-
   /** The shared BM25 substrate — ONE corpus/tokenize pass: tfc is
     * persisted (CacheRegistry-tracked) and every statistic derives from
     * it — dl = Σtf per doc (token count by definition), df/query
     * terms/candidates/contributions all read the cache instead of
     * re-tokenizing (measured: the capped path's second tfc subtree
-    * otherwise re-shuffles the whole posting build). A caller-supplied
-    * `tfcPre` (MUST be [[bm25Tfc]] over the same docs, already
-    * materialized/cut) replaces the per-call build.
+    * otherwise re-shuffles the whole posting build).
     */
-  private def bm25Stats(docs: DataFrame, tfcPre: Option[DataFrame])
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+  private def bm25Stats(
+      docs: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     import org.apache.spark.storage.StorageLevel
-    // the pre-built table is persisted too (idempotent): its lineage cut
-    // makes recomputation impossible, but without a storage level every
-    // consumer below re-reads the checkpoint files — persist serves them
-    // from memory within the query; the harness release between queries
-    // only drops the cache, never the files
+    val toks = Parallelism.ensure(docs
+        .select(col("doc_id").cast("long").as("doc_id"), col("text")))
+      .select(col("doc_id"),
+        explode_outer(TextAnalysis.tokens(col("text"))).as("term"))
+      .filter(col("term").isNotNull) // Dedup.safeExplodeNote
     val tfc = CacheRegistry.track(
-      tfcPre.getOrElse(bm25Tfc(docs)).persist(StorageLevel.MEMORY_AND_DISK))
+      toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
     val dl = tfc.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
     val stats = broadcast(dl.agg(
       count(lit(1)).cast("double").as("__n"),
@@ -282,14 +264,13 @@ object Retrieval {
       k1: Double = 1.25,
       b: Double = 0.75,
       logIdf: Boolean = true,
-      genDfCap: Option[Long] = None,
-      tfcPre: Option[DataFrame] = None): DataFrame = {
+      genDfCap: Option[Long] = None): DataFrame = {
     require(k >= 1 && fbDocs >= 1 && fbTerms >= 1 && k1 > 0 &&
       b >= 0 && b <= 1)
     require(expWeight > 0 && expWeight <= 1 &&
       (expWeight * 1024.0) == math.floor(expWeight * 1024.0),
       s"expWeight must be an exact binary fraction (k/1024), got $expWeight")
-    val (tfc, dl, stats, dft) = bm25Stats(docs, tfcPre)
+    val (tfc, dl, stats, dft) = bm25Stats(docs)
     val qterms = tfc.filter(col("doc_id") < queryMaxId)
       .select(col("doc_id").as("query_id"), col("term")).distinct()
     val qt1 = dft.join(qterms, Seq("term")).withColumn("__w", lit(1.0))
@@ -369,10 +350,9 @@ object Retrieval {
       perList: Int,
       k: Int,
       rrfK: Int = 60,
-      genDfCap: Option[Long] = None,
-      tfcPre: Option[DataFrame] = None): DataFrame = {
+      genDfCap: Option[Long] = None): DataFrame = {
     val sparse = bm25TopK(docs, nQueries, perList, logIdf = false,
-        genDfCap = genDfCap, tfcPre = tfcPre)
+        genDfCap = genDfCap)
       .select(col("query_id"), col("doc_id").as("item_id"),
         col("rank").as("rank_sparse"))
     val dense = Similarity.bruteForceTopK(
@@ -397,10 +377,9 @@ object Retrieval {
       rrfK: Int = 60,
       fbDocs: Int = 5,
       fbTerms: Int = 10,
-      genDfCap: Option[Long] = None,
-      tfcPre: Option[DataFrame] = None): DataFrame = {
+      genDfCap: Option[Long] = None): DataFrame = {
     val sparse = bm25PrfTopK(docs, nQueries, perList, fbDocs, fbTerms,
-        logIdf = false, genDfCap = genDfCap, tfcPre = tfcPre)
+        logIdf = false, genDfCap = genDfCap)
       .select(col("query_id"), col("doc_id").as("item_id"),
         col("rank").as("rank_sparse"))
     val dense = Similarity.bruteForceTopK(

@@ -566,8 +566,7 @@ private[graft] object QueriesPart2 {
     // first five docs as seed queries, top-10 lexical matches each
     "q_bm25" -> ((s, dir) =>
       operators.Retrieval.bm25TopK(Tables.load(s, dir, "documents"),
-          queryMaxId = 5, k = 10, logIdf = false,
-          tfcPre = Some(bm25Tfc(s, dir)))
+          queryMaxId = 5, k = 10, logIdf = false)
         .orderBy("query_id", "rank")),
 
     // BM25 + RM3 pseudo-relevance feedback (the production query-
@@ -578,8 +577,7 @@ private[graft] object QueriesPart2 {
     // interpolation replay bit-for-bit
     "q_bm25_prf" -> ((s, dir) =>
       operators.Retrieval.bm25PrfTopK(Tables.load(s, dir, "documents"),
-          queryMaxId = 5, k = 10, fbDocs = 5, fbTerms = 10, logIdf = false,
-          tfcPre = Some(bm25Tfc(s, dir)))
+          queryMaxId = 5, k = 10, fbDocs = 5, fbTerms = 10, logIdf = false)
         .orderBy("query_id", "rank")),
 
     // the OTHER export tail: curate at document granularity, keep the

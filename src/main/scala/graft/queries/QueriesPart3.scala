@@ -579,8 +579,7 @@ private[graft] object QueriesPart3 {
       operators.Retrieval.rrfHybridBm25TopK(
           Tables.load(s, dir, "documents"),
           Tables.load(s, dir, "embeddings"),
-          nQueries = 3, perList = 20, k = 10,
-          tfcPre = Some(bm25Tfc(s, dir)))
+          nQueries = 3, perList = 20, k = 10)
         .orderBy("query_id", "rank")),
 
     // expansion INSIDE the hybrid: the lexical leg is RM3-expanded BM25
@@ -590,8 +589,7 @@ private[graft] object QueriesPart3 {
       operators.Retrieval.rrfHybridPrfTopK(
           Tables.load(s, dir, "documents"),
           Tables.load(s, dir, "embeddings"),
-          nQueries = 3, perList = 20, k = 10,
-          tfcPre = Some(bm25Tfc(s, dir)))
+          nQueries = 3, perList = 20, k = 10)
         .orderBy("query_id", "rank")),
 
     // diversity-aware exemplar selection: greedy MMR over the dense

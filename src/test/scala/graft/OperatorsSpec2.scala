@@ -2182,23 +2182,4 @@ class OperatorsSpec2 extends AnyFunSuite {
     assert(reused == plain, "reuse handles changed the probe answer")
     CacheRegistry.release(spark)
   }
-
-  test("Retrieval tfcPre (shared posting substrate) == per-call build, all rankers") {
-    // r21: the bm25 family threads one lineage-cut (doc_id, term, tf)
-    // table through tfcPre instead of each ranker rebuilding it — pin
-    // every ranker row-identical with and without the handle
-    val d = docs.limit(80).select("doc_id", "text")
-    val tfc = graft.operators.Lineage.cut(Retrieval.bm25Tfc(d))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
-    assert(rows(Retrieval.bm25TopK(d, 5, 10, logIdf = false,
-        tfcPre = Some(tfc))) ==
-      rows(Retrieval.bm25TopK(d, 5, 10, logIdf = false)))
-    assert(rows(Retrieval.bm25PrfTopK(d, 5, 10, fbDocs = 3, fbTerms = 5,
-        logIdf = false, tfcPre = Some(tfc))) ==
-      rows(Retrieval.bm25PrfTopK(d, 5, 10, fbDocs = 3, fbTerms = 5,
-        logIdf = false)))
-    CacheRegistry.release(spark)
-    graft.operators.Lineage.release(tfc, deleteFiles = true)
-  }
 }

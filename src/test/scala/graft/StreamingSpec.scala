@@ -91,7 +91,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("watermarked streaming dedup drops planted duplicates, keeps one per id") {
     val dir = tmpDir("stream-wmdedup").toString
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     // plant exact duplicates of a known slice, all within the watermark
     src.union(src.filter(col("event_id") % 5 === 0))

@@ -526,7 +526,6 @@ class StreamingSpec2 extends AnyFunSuite {
       Streaming.eventWindowCounts(spark, eventsDir), "evt_win")
       .orderBy("window_start", "event_type").collect()
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batch = spark.read.parquet(eventsDir)
       .transform(Tables.normalizeEventTs)
       .withColumn("event_time", timestamp_micros(expr("ts div 1000")))

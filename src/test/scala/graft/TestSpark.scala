@@ -7,21 +7,11 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One shared local SparkSession for all suites. */
+/** One shared local SparkSession for all suites: the factory's session
+  * on a fixed `local[4]`, the width build.sbt's fork sizing assumes.
+  */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s.sparkContext.setCheckpointDir(
-      CheckpointDirs.temp())
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local(cpus = 4)
 
   /** Build a lines DF shaped like ParseOracle.readLines output. */
   def linesDF(lines: Seq[String], file: String = "mem"): DataFrame = {
