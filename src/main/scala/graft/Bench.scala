@@ -152,7 +152,7 @@ object Bench {
     val substrates: Seq[(String, Double)] =
       queries.QueryShared.substratesFor(only).map { sub =>
         sub.name -> timed {
-          try sub.build(spark, sfDir).count()
+          try sub(spark, sfDir).count()
           catch { case e if scala.util.control.NonFatal(e) =>
             System.err.println(s"[bench] substrate ${sub.name} unavailable: $e"); -1L }
         }._2
@@ -370,10 +370,15 @@ object Bench {
           System.err.println(s"[bench] $name failed: $e"); false
         }
       if (ok) {
+        // clocks first: the fingerprint waits for the listener bus to go
+        // quiet (≥ 100 ms of polling), which is not the query's time
+        val wall = (System.nanoTime() - t0) / 1e9
+        val cpu = (cpuNanos() - c0) / 1e9
+        val gc = gcMs() - g0
+        val peak = peakMb()
         val (fp, lfp) = planFingerprint(
           fpDump.map(_.resolve(s"$name.${attemptSeq.incrementAndGet()}")))
-        Attempt((System.nanoTime() - t0) / 1e9, (cpuNanos() - c0) / 1e9,
-          gcMs() - g0, peakMb(), fp, lfp, m1Here)
+        Attempt(wall, cpu, gc, peak, fp, lfp, m1Here)
       } else failedAttempt
     }
     // SPARK_GRAFT_REPEAT=N (iteration runs): measure each selected query
@@ -400,7 +405,7 @@ object Bench {
         // release after EVERY attempt (r20 verdict task 3), not only in
         // repeat mode: with the release running after both attempts,
         // attempt 2 re-resolved attempt 1's still-cached plans, so a
-        // query that persists its final answer (QueryShared.sortBarrier)
+        // query that persists its final answer (q_linkage's exchange barrier)
         // recorded a warm cache READ as its min-of-2 wall. Attempts are
         // now iid — codegen/JIT stay warm (that is what min-of-2 is
         // for), data caches do not. This also drops intermediates so

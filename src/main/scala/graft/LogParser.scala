@@ -42,28 +42,6 @@ object LogParser {
     */
   val DefaultSplitMaxBytes: Long = 32L * 1024 * 1024
 
-  /** Full pipeline: log file(s) at `path` (a path, glob, or comma-separated
-    * list) → entries DataFrame ([[Schema.parsedSchema]]), via [[parseFast]].
-    *
-    * Semantics (golden-tested against the reference test tables):
-    *   - splits strictly on `\n` (a lone `\r` is NOT a record delimiter,
-    *     matching Go's `bufio.ScanLines`; progress lines legitimately embed
-    *     `\r`); the single trailing `\r` of CRLF lines is removed;
-    *   - a line shorter than 10 bytes, without the OSC prefix, or without a
-    *     BEL terminator passes through unchanged with a null timestamp
-    *     (reference scanner.go:22-51);
-    *   - a malformed timestamp (non-numeric / overflow) sets `parse_error`
-    *     and passes the raw line through — the reference hard-errors instead
-    *     (scanner.go:55-58); aborting a distributed scan mid-file is not
-    *     idiomatic Spark, so we flag and count (SURVEY.md §7.4);
-    *   - `group` is the carry-forward of the last group header's clean
-    *     content; header lines belong to their own group; lines before any
-    *     header get "" (reference parser.go:41-56).
-    */
-  def parse(spark: SparkSession, path: String,
-      splitMaxBytes: Long = DefaultSplitMaxBytes): DataFrame =
-    parseFast(spark, path, splitMaxBytes)
-
   /** `(byte offset, line)` records of the files at `path`, one partition per
     * byte-range input split of at most `splitMaxBytes`. TextInputFormat
     * assigns every line to exactly one split (a line spanning a boundary
@@ -89,7 +67,25 @@ object LogParser {
     java.util.Arrays.copyOf(buf, len)
   }
 
-  /** Fast ingest: reference-style per-partition byte scanning, made
+  /** Full pipeline: log file(s) at `path` (a path, glob, or comma-separated
+    * list) → entries DataFrame ([[Schema.parsedSchema]]).
+    *
+    * Semantics (golden-tested against the reference test tables):
+    *   - splits strictly on `\n` (a lone `\r` is NOT a record delimiter,
+    *     matching Go's `bufio.ScanLines`; progress lines legitimately embed
+    *     `\r`); the single trailing `\r` of CRLF lines is removed;
+    *   - a line shorter than 10 bytes, without the OSC prefix, or without a
+    *     BEL terminator passes through unchanged with a null timestamp
+    *     (reference scanner.go:22-51);
+    *   - a malformed timestamp (non-numeric / overflow) sets `parse_error`
+    *     and passes the raw line through — the reference hard-errors instead
+    *     (scanner.go:55-58); aborting a distributed scan mid-file is not
+    *     idiomatic Spark, so we flag and count (SURVEY.md §7.4);
+    *   - `group` is the carry-forward of the last group header's clean
+    *     content; header lines belong to their own group; lines before any
+    *     header get "" (reference parser.go:41-56).
+    *
+    * Execution: reference-style per-partition byte scanning, made
     * distributed by the split-boundary prefix pass.
     *
     * Pass A streams each split that a later split of the same file follows,
@@ -103,7 +99,7 @@ object LogParser {
     * emitting finished catalyst rows. No shuffle, no sort, no window:
     * aggregate throughput scales with splits × per-core scanner speed.
     */
-  def parseFast(spark: SparkSession, path: String,
+  def parse(spark: SparkSession, path: String,
       splitMaxBytes: Long = DefaultSplitMaxBytes): DataFrame = {
     val lines = hadoopLines(spark, path, splitMaxBytes)
     val files = lines.partitions.map(Shims.hadoopSplitFile)

@@ -27,7 +27,7 @@ object Sessions {
     // unreachable: the min-label CC loop's between-cut successors fall
     // back to the previous checkpoint's files on executor loss, so they
     // are deleted by the ContextCleaner, never eagerly
-    // (Lineage.release's deleteFiles contract)
+    // (CacheRegistry.free's deleteFiles contract)
     "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true",
     "spark.ui.enabled" -> "false")
 

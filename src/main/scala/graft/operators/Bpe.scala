@@ -58,7 +58,7 @@ object Bpe {
     // char split filters empties: Spark's split(word, '') emits a
     // trailing "" (Java split limit -1 semantics) that a clean symbol
     // alphabet — and the DuckDB replay — must not contain
-    var syms = Lineage.cut(vocab.select(col("word"), col("wcnt"),
+    var syms = CacheRegistry.cut(vocab.select(col("word"), col("wcnt"),
       concat(lit(" "),
         concat_ws("  ", concat(
           expr("filter(split(word, ''), x -> x <> '')"),
@@ -102,13 +102,13 @@ object Bpe {
         // the previous round's checkpoint blocks are released — without
         // this, up to `rounds` vocabulary-sized cached RDDs accumulate
         // (the pageRank unpersist pattern)
-        val cutNext = Lineage.cut(next)
-        Lineage.release(syms, deleteFiles = true)
+        val cutNext = CacheRegistry.cut(next)
+        CacheRegistry.free(syms, deleteFiles = true)
         syms = cutNext
         r += 1
       }
     }
-    Lineage.release(syms, deleteFiles = true)
+    CacheRegistry.free(syms, deleteFiles = true)
     merges.result()
       .toDF("round", "left_sym", "right_sym", "merged", "pair_count")
       .orderBy("round")

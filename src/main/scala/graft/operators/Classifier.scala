@@ -82,8 +82,7 @@ object Classifier {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(lr2 > 0 && lr2 <= 1.0, s"lr2 must be in (0, 1], got $lr2")
     val spark = docs.sparkSession
-    val feats = CacheRegistry.track(presence(docs, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val feats = CacheRegistry.persist(presence(docs, dim))
     // null-safe label: a null predicate row labels 0, as the oracle's
     // CASE WHEN does
     val y = docs.select(col("doc_id"),

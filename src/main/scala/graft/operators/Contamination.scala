@@ -63,8 +63,7 @@ object Contamination {
     val probeSide =
       if (!broadcastProbes) probeEx
       else {
-        val p = CacheRegistry.track(
-          probeEx.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val p = CacheRegistry.persist(probeEx)
         if (p.count() <= broadcastRowCap) broadcast(p) else p
       }
     probeSide.join(kept, "sh")

@@ -251,15 +251,13 @@ object Dedup {
       shingleSize: Int = 3,
       threshold: Double = 0.5,
       pairListCutoff: Int = 128): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
 
     // persisted: the signature pipeline (shingle scan + 16-way min agg)
     // otherwise re-runs for the banding pass and BOTH verification sides.
     // Tracked in CacheRegistry — callers release after consuming.
-    val sigs = CacheRegistry.track(minHashSignatures(docs, numHashes, shingleSize)
-      .persist(StorageLevel.MEMORY_AND_DISK))
+    val sigs = CacheRegistry.persist(minHashSignatures(docs, numHashes, shingleSize))
 
     // band id folded into the bucket hash → one flat join key; the bucket
     // table carries (doc_id, bucket) only — signatures never ride through
@@ -279,10 +277,9 @@ object Dedup {
     // persisted: both pairsFromIdLists branches (inline expansion + heavy
     // tail self-join) scan the bucket lists — without this the banding
     // groupBy runs twice
-    val lists = CacheRegistry.track(banded.groupBy("bucket")
+    val lists = CacheRegistry.persist(banded.groupBy("bucket")
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .filter(size(col("ids")) > 1))
     val candidates = pairsFromIdLists(lists, "bucket", pairListCutoff).distinct()
 
     val est = size(filter(zip_with(col("__sig_a"), col("__sig_b"), (x, y) =>
@@ -316,21 +313,18 @@ object Dedup {
       shingleSize: Int = 3,
       threshold: Double = 0.5,
       pairListCutoff: Int = 128): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(numHashes % bands == 0, "bands must divide numHashes")
 
     // wide-form signatures (s0..s{n-1}) — persisted: banding and BOTH
     // estimate sides re-read them
-    val sigs = CacheRegistry.track(
-      minHashSignaturesPortable(docs, numHashes, shingleSize)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val sigs = CacheRegistry.persist(
+      minHashSignaturesPortable(docs, numHashes, shingleSize))
 
     val banded = portableBandBuckets(sigs, numHashes, bands)
 
-    val lists = CacheRegistry.track(banded.groupBy("bucket")
+    val lists = CacheRegistry.persist(banded.groupBy("bucket")
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .filter(size(col("ids")) > 1))
     val candidates = pairsFromIdLists(lists, "bucket", pairListCutoff).distinct()
 
     portableEstJaccard(candidates, sigs, numHashes)
@@ -457,15 +451,13 @@ object Dedup {
       k: Int = 3,
       threshold: Double = 0.5,
       maxShingleDf: Int = 64): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(threshold > 0.0 && threshold <= 1.0)
     require(maxShingleDf >= 2)
     // (doc_id, sh) — per-doc distinct by construction (shinglesFromTokens
     // array_distincts); persisted: sizes, df, and both join sides read it
-    val sh = CacheRegistry.track(withShingles(docs, k)
+    val sh = CacheRegistry.persist(withShingles(docs, k)
       .select(col("doc_id"), explode_outer(col("__shingles")).as("sh"))
-      .filter(col("sh").isNotNull) // safeExplodeNote
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .filter(col("sh").isNotNull)) // safeExplodeNote
     sh.count()
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("__sz"))
     val linking = sh.groupBy("sh").agg(count(lit(1)).as("__df"))
@@ -494,7 +486,6 @@ object Dedup {
       pairListCutoff: Int = 128,
       hashOrderPrefix: Boolean = false): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel
 
     // small-input parallelism guard ([[Parallelism.ensure]]): the
     // tokenize+shingle+hash build is the operator's heaviest map work
@@ -507,8 +498,7 @@ object Dedup {
     // measured 4× the operator's total cost at sf0.1. The set table is
     // tiny relative to the corpus (a few longs per doc-shingle);
     // unreferenced blocks are reclaimed by the ContextCleaner.
-    val rawSets = CacheRegistry.track(withHashedShingleSets(src, shingleSize)
-      .persist(StorageLevel.MEMORY_AND_DISK))
+    val rawSets = CacheRegistry.persist(withHashedShingleSets(src, shingleSize))
 
     // Prefix extraction. The AllPairs prefix filter is LOSSLESS under ANY
     // consistent global order of shingles (the theorem needs only a total
@@ -563,10 +553,9 @@ object Dedup {
     // candidate pairs: docs sharing a prefix shingle. Inline expansion for
     // short id-lists; distributed self-join for the heavy tail. Persisted:
     // both branches (and the union) would re-run the freq+window pipeline.
-    val lists = CacheRegistry.track(prefixes.groupBy("sh")
+    val lists = CacheRegistry.persist(prefixes.groupBy("sh")
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .filter(size(col("ids")) > 1))
     // explicit numPartitions repartition, NOT left to AQE: the candidate
     // pair stream is byte-tiny (two longs a row) so AQE coalesces the
     // post-distinct read to 1-2 partitions — and the expensive per-row
@@ -676,10 +665,9 @@ object Dedup {
   def winnowPairs(docs: DataFrame, k: Int = 3, window: Int = 4,
       minShared: Int = 2, maxDocsPerHash: Int = 64): DataFrame = {
     require(minShared >= 1 && maxDocsPerHash >= 2)
-    val sel = CacheRegistry.track(
+    val sel = CacheRegistry.persist(
       winnowFingerprints(docs, k, window)
-        .select(col("doc_id"), col("fp_hash")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select(col("doc_id"), col("fp_hash")).distinct())
     sel.count() // the linking agg and both join sides read it
     val linking = sel.groupBy("fp_hash").agg(count(lit(1)).as("__nd"))
       .filter(col("__nd") > 1 && col("__nd") <= maxDocsPerHash)
@@ -776,17 +764,15 @@ object Dedup {
     */
   def dedupRepresentativesFromLabels(docs: DataFrame, labels: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel
     val q = TextAnalysis.qualityScore(docs)
       .select(col("doc_id"), col("alpha_ratio"), col("n_chars_measured"))
     // persisted + eagerly filled: the rep filter and the member join are
     // two consumers of the ranked table (AQE cache-race note)
-    val ranked = CacheRegistry.track(labels.join(q, "doc_id")
+    val ranked = CacheRegistry.persist(labels.join(q, "doc_id")
       .withColumn("__rn", row_number().over(
         Window.partitionBy("canonical_id")
           .orderBy(col("alpha_ratio").desc, col("n_chars_measured").desc,
-            col("doc_id").asc)))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+            col("doc_id").asc))))
     ranked.count()
     val reps = ranked.filter(col("__rn") === 1)
       .select(col("canonical_id"), col("doc_id").as("rep_id"))
@@ -812,18 +798,15 @@ object Dedup {
       numHashes: Int = 16,
       bands: Int = 4,
       shingleSize: Int = 3): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     // persisted + eagerly filled: each side has two consumers (its count
     // and the hit join) — the AQE cache-race note
-    val exact = CacheRegistry.track(
+    val exact = CacheRegistry.persist(
       ngramJaccardPairs(docs, shingleSize, threshold)
-        .select(col("doc_id_a"), col("doc_id_b"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .select(col("doc_id_a"), col("doc_id_b")))
     exact.count()
-    val found = CacheRegistry.track(
+    val found = CacheRegistry.persist(
       minHashNearDupPortable(docs, numHashes, bands, shingleSize, threshold)
-        .select(col("doc_id_a"), col("doc_id_b"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .select(col("doc_id_a"), col("doc_id_b")))
     found.count()
     val hits = found.join(exact, Seq("doc_id_a", "doc_id_b"))
       .agg(count(lit(1)).as("hit_pairs"))
@@ -902,12 +885,10 @@ object Dedup {
   private[operators] def spanFingerprints(
       docs: DataFrame, spanTokens: Int, stride: Int): DataFrame = {
     require(stride > 0 && stride <= spanTokens, "need 0 < stride <= spanTokens")
-    import org.apache.spark.storage.StorageLevel
-    CacheRegistry.track(
+    CacheRegistry.persist(
       TextAnalysis.chunkDocuments(docs, spanTokens, spanTokens - stride)
         .filter(col("n_chunk_tokens") === spanTokens)
-        .select(col("doc_id"), col("chunk_id"), md5(col("chunk_text")).as("span_md5"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .select(col("doc_id"), col("chunk_id"), md5(col("chunk_text")).as("span_md5")))
   }
 
   def duplicateSpans(
@@ -1001,18 +982,16 @@ object Dedup {
       bucketDocScoped: Boolean, statName: String): DataFrame = {
     require(k > 1, s"minTokens must be > 1, got $k")
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel
     def windowText(toksCol: Column, p: Column): Column =
       concat_ws(" ", slice(toksCol, p + 1, lit(k)))
     val src = docs
-    val spans = CacheRegistry.track(src
+    val spans = CacheRegistry.persist(src
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("__toks"))
       .filter(size(col("__toks")) >= k)
       .select(col("doc_id"), col("__toks"),
         explode(sequence(lit(0), size(col("__toks")) - k)).as("__p"))
       .select(col("doc_id"), col("__p").cast("long").as("p"),
-        md5(windowText(col("__toks"), col("__p"))).as("span_md5"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+        md5(windowText(col("__toks"), col("__p"))).as("span_md5")))
     val bucketCols = if (bucketDocScoped) Seq("doc_id", "span_md5")
       else Seq("span_md5")
     val dups =
@@ -1143,7 +1122,6 @@ object Dedup {
       driverThreshold: Int = 1 << 20,
       checkpointEvery: Int = 5,
       starSwitchAfter: Int = 3): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
 
     // Adaptive small-graph path: the near-dup pair graph is orders of
     // magnitude smaller than the corpus (it IS the point of near-dup
@@ -1158,12 +1136,11 @@ object Dedup {
     // 16, … result-stage re-executions when matches are sparse) — measured
     // ~2.5× the pipeline's one-pass cost when `pairs` is an expensive
     // near-dup join (driver bench, round 2).
-    val p = pairs.select(col("doc_id_a"), col("doc_id_b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val p = CacheRegistry.persist(pairs.select(col("doc_id_a"), col("doc_id_b")))
     val edgeCount = p.count()
     if (edgeCount <= driverThreshold) {
       val sample = p.collect()
-      p.unpersist(blocking = false)
+      CacheRegistry.free(p)
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -1191,13 +1168,13 @@ object Dedup {
     // propagation loop — p is only read to build edges, and carrying both
     // caches through the loop is ~1.5x redundant footprint (round-2
     // advisor finding)
-    val edges = p.select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
-      .union(p.select(col("doc_id_b").as("src"), col("doc_id_a").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = CacheRegistry.persist(
+      p.select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
+        .union(p.select(col("doc_id_b").as("src"), col("doc_id_a").as("dst"))))
     edges.count()
-    p.unpersist(blocking = false)
-    var labels = docs.select(col("doc_id"), col("doc_id").as("label"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    CacheRegistry.free(p)
+    var labels = CacheRegistry.persist(
+      docs.select(col("doc_id"), col("doc_id").as("label")))
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIter) {
@@ -1219,28 +1196,19 @@ object Dedup {
       // recomputing — acceptable in local mode where executor==driver,
       // never on a cluster. Configure a checkpoint dir at 100 TB.
       val next =
-        if ((i + 1) % checkpointEvery == 0) {
-          if (docs.sparkSession.sparkContext.getCheckpointDir.isDefined) {
-            // persist first: reliable checkpoint() runs a SECOND job to
-            // write the checkpoint files, which would otherwise re-execute
-            // the full lineage back to the previous cut (advisor r6)
-            nextPlan.persist(StorageLevel.MEMORY_AND_DISK)
-            val cp = nextPlan.checkpoint(true)
-            nextPlan.unpersist()
-            cp
-          } else nextPlan.localCheckpoint(true)
-        } else nextPlan.persist(StorageLevel.MEMORY_AND_DISK)
+        if ((i + 1) % checkpointEvery == 0) CacheRegistry.cut(nextPlan)
+        else CacheRegistry.persist(nextPlan)
       changed = next
         .join(labels.select(col("doc_id"), col("label").as("__old")), "doc_id")
         .filter(col("label") =!= col("__old")).count()
-      // Lineage.release, not unpersist: on cut rounds the dead `labels`
+      // free, not unpersist: on cut rounds the dead `labels`
       // is a localCheckpoint result whose blocks a Dataset.unpersist
       // cannot evict (r10 verdict). NO deleteFiles here: successors
       // between cuts are merely persisted and fall back to the previous
       // reliable checkpoint's files on executor loss — cluster
       // deployments reclaim those via
       // spark.cleaner.referenceTracking.cleanCheckpoints=true.
-      Lineage.release(labels)
+      CacheRegistry.free(labels)
       labels = next
       i += 1
       if (changed > 0 && i >= starSwitchAfter && i < maxIter) {
@@ -1254,17 +1222,16 @@ object Dedup {
           .union(labels.filter(col("label") =!= col("doc_id"))
             .select(col("doc_id").as("doc_id_a"), col("label").as("doc_id_b")))
         val out = dedupClustersStar(docs, remaining)
-        edges.unpersist()
+        CacheRegistry.free(edges)
         // labels may be a cut result on checkpointEvery rounds; star has
         // already materialized its own pair table, so its blocks are dead
-        Lineage.release(labels)
+        CacheRegistry.free(labels)
         return out
       }
     }
-    edges.unpersist()
-    // the final labels cache backs the returned (lazy) frame — hand it to
-    // the registry for caller-side release rather than dropping it here
-    CacheRegistry.track(labels)
+    CacheRegistry.free(edges)
+    // the final labels (a tracked persist, or a cut round's result) back
+    // the returned lazy frame, so they are left for caller-side release
     labels.select(col("doc_id"), col("label").as("canonical_id"))
   }
 
@@ -1302,7 +1269,6 @@ object Dedup {
       pairs: DataFrame,
       maxIter: Int = 25,
       checkpointEvery: Int = 4): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
 
     // EVERY round cuts lineage with an eager localCheckpoint, unlike the
     // min-label loop's every-5 persist cadence: one star round references
@@ -1314,14 +1280,9 @@ object Dedup {
     // they cost a persist + a second write job, which at one per round
     // doubled the loop's job count for fault-tolerance no round needs
     // twice.
-    def cutLineage(df: DataFrame, round: Int): DataFrame =
-      if ((round + 1) % checkpointEvery == 0
-          && docs.sparkSession.sparkContext.getCheckpointDir.isDefined) {
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-        val cp = df.checkpoint(true)
-        df.unpersist()
-        cp
-      } else df.localCheckpoint(true)
+    def cutRound(df: DataFrame, round: Int): DataFrame =
+      if ((round + 1) % checkpointEvery == 0) CacheRegistry.cut(df)
+      else df.localCheckpoint(true)
 
     // materialize the PAIR table alone first (same discipline as
     // [[dedupClusters]]): the pair source is typically an expensive
@@ -1331,8 +1292,7 @@ object Dedup {
     // branches as concurrent stages that RACE the lazy cache fill and
     // re-run the full scan each (measured: the tokenize/shingle scan
     // executed 4× without this, 35 cpu-s vs 16 for the min-label twin).
-    val p = pairs.select(col("doc_id_a"), col("doc_id_b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val p = CacheRegistry.persist(pairs.select(col("doc_id_a"), col("doc_id_b")))
     p.count()
 
     // oriented invariant: edges are kept as (u, v) with v < u. Self-loops
@@ -1343,7 +1303,7 @@ object Dedup {
     // caches — which the min-label star-switch path releases right after
     // we return (advisor r11). The cut materializes it independently, so
     // the handoff never depends on upstream cache survival.
-    var edges = Lineage.cut(p
+    var edges = CacheRegistry.cut(p
       .select(greatest(col("doc_id_a"), col("doc_id_b")).as("u"),
         least(col("doc_id_a"), col("doc_id_b")).as("v"))
       .filter(col("u") =!= col("v"))
@@ -1361,7 +1321,7 @@ object Dedup {
       (r.getLong(0), r.getLong(1))
     }
     var edgeSig = sig(edges)
-    p.unpersist(blocking = false)
+    CacheRegistry.free(p)
     var converged = edgeSig._1 == 0L
     var i = 0
     while (!converged && i < maxIter) {
@@ -1405,17 +1365,17 @@ object Dedup {
       // two jobs per round: the eager lineage cut (which computes the
       // whole large+small star pipeline once) and the tiny signature agg
       // on its cached/checkpointed result
-      val nextCached = cutLineage(next, i)
+      val nextCached = cutRound(next, i)
       val nextSig = sig(nextCached)
       converged = nextSig == edgeSig
-      // Lineage.release, not unpersist: every round's dead `edges` is a
+      // free, not unpersist: every round's dead `edges` is a
       // cut result (localCheckpoint blocks, or reliable-checkpoint files
       // on checkpointEvery rounds) that a Dataset.unpersist cannot free
       // (r10 verdict #1). deleteFiles is safe here because nextCached is
       // ALWAYS an eager cut — no successor recomputes through the dead
       // round. The star loop references its input ~4× per round, so
       // freed memory matters most exactly here.
-      Lineage.release(edges, deleteFiles = true)
+      CacheRegistry.free(edges, deleteFiles = true)
       edges = nextCached
       edgeSig = nextSig
       i += 1
@@ -1434,14 +1394,13 @@ object Dedup {
     val starEdges =
       if (converged) edges
       else edges.groupBy("u").agg(min(col("v")).as("v"))
-    val labels = docs.select(col("doc_id"))
+    val labels = CacheRegistry.persist(docs.select(col("doc_id"))
       .join(starEdges.select(col("u").as("doc_id"), col("v").as("__root")), Seq("doc_id"), "left")
       .select(col("doc_id"),
-        coalesce(col("__root"), col("doc_id")).as("canonical_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        coalesce(col("__root"), col("doc_id")).as("canonical_id")))
     // materialize the labels OFF the final cut, then reclaim its BLOCKS
     // eagerly: `edges` is a cut result whose blocks a registry unpersist
-    // cannot free (Lineage.release contract), so handing it to
+    // cannot free ([[CacheRegistry.free]] contract), so handing it to
     // CacheRegistry would leave the loop's last checkpoint resident until
     // the ContextCleaner got around to it. The persisted labels table is
     // the only live consumer and is doc-count-sized.
@@ -1454,8 +1413,7 @@ object Dedup {
     // reclaimed by the ContextCleaner once labels is unreachable
     // (cleanCheckpoints=true, set by every engine-owned builder).
     labels.count()
-    Lineage.release(edges)
-    CacheRegistry.track(labels)
+    CacheRegistry.free(edges)
     labels
   }
 

@@ -227,10 +227,9 @@ object Eval {
     def combine(a: Column, b: Column) =
       if (op == "sum") a + b else greatest(a, b)
     def aggOf(c: Column) = if (op == "sum") sum(c) else max(c)
-    val ranged = CacheRegistry.track(hist
+    val ranged = CacheRegistry.persist(hist
       .repartitionByRange(g :+ col("__s"): _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .withColumn("__pid", spark_partition_id()))
     ranged.count()
     val wLocal = Window
       .partitionBy(col("__pid") +: g: _*).orderBy(ord)

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics over edge tables. Companion to the
   * connected-components family ([[Dedup.dedupClusters]] /
@@ -28,8 +27,6 @@ import org.apache.spark.storage.StorageLevel
 object Graph {
 
   private val Q = 1L << 40
-
-  private def cut(df: DataFrame): DataFrame = Lineage.cut(df)
 
   /** PageRank over `edges(srcCol, dstCol)` (directed; pass both
     * directions for an undirected graph). Node universe = src ∪ dst.
@@ -57,7 +54,7 @@ object Graph {
     // one cut up front: e backs 3 plans per iteration — without it the
     // whole edge-derivation subtree (for spanLinkEdges: chunk + md5 +
     // self-join) rides inside every iteration's optimizer pass
-    val e = cut(weightCol match {
+    val e = CacheRegistry.cut(weightCol match {
       case Some(wc) => edges
         .select(col(srcCol).as("src"), col(dstCol).as("dst"),
           col(wc).cast("long").as("w"))
@@ -66,17 +63,14 @@ object Graph {
         .distinct()
         .withColumn("w", lit(1L))
     })
-    val nodes = CacheRegistry.track(
+    val nodes = CacheRegistry.persist(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val outdeg = CacheRegistry.track(
-      e.groupBy("src").agg(sum(col("w")).as("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .distinct())
+    val outdeg = CacheRegistry.persist(e.groupBy("src").agg(sum(col("w")).as("deg")))
     val n = nodes.count()
     if (n == 0) {
-      // NOT Lineage.release: the returned frame still reads e's
+      // NOT CacheRegistry.free: the returned frame still reads e's
       // checkpointed RDD if its own cache entry is ever evicted
       e.unpersist(blocking = false); outdeg.unpersist(blocking = false)
       return nodes.withColumn("rank", lit(0.0))
@@ -102,7 +96,7 @@ object Graph {
 
       // per-iteration cut, not persist: rank rows are one-per-node but
       // the PLAN doubles per round without truncation
-      val next = cut(
+      val next = CacheRegistry.cut(
         nodes.join(contribs, col("node") === col("dst"), "left")
           .crossJoin(dangDf)
           .select(col("node"),
@@ -114,10 +108,10 @@ object Graph {
       // cannot evict; on the reliable path the dead round is checkpoint
       // FILES, which deleteFiles reclaims — safe here because `next` is
       // an eager cut with its own files before the predecessor goes
-      Lineage.release(ranks, deleteFiles = true)
+      CacheRegistry.free(ranks, deleteFiles = true)
       ranks = next
     }
-    Lineage.release(e, deleteFiles = true)
+    CacheRegistry.free(e, deleteFiles = true)
     outdeg.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     ranks
@@ -150,21 +144,17 @@ object Graph {
       damping: Double = 0.85): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
     require(damping > 0.0 && damping < 1.0)
-    import org.apache.spark.storage.StorageLevel
 
-    val e = cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e = CacheRegistry.cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct())
     val seedIds = seeds.select(col(seedCol).as("node")).distinct()
-    val nodes = CacheRegistry.track(
+    val nodes = CacheRegistry.persist(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node")))
         .distinct()
         .join(seedIds.withColumn("__isSeed", lit(true)), Seq("node"), "left")
-        .select(col("node"), coalesce(col("__isSeed"), lit(false)).as("__seed"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val outdeg = CacheRegistry.track(
-      e.groupBy("src").agg(count(lit(1)).as("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .select(col("node"), coalesce(col("__isSeed"), lit(false)).as("__seed")))
+    val outdeg = CacheRegistry.persist(e.groupBy("src").agg(count(lit(1)).as("deg")))
     val ns = nodes.filter(col("__seed")).count()
     require(ns > 0,
       "personalizedPageRank: no seed is a node of the graph — an all-zero " +
@@ -186,17 +176,17 @@ object Graph {
         .select(col("dst"),
           floor(col("rank") / col("deg") * Q + 0.5).cast("long").as("c"))
         .groupBy("dst").agg(sum(col("c")).as("s"))
-      val next = cut(
+      val next = CacheRegistry.cut(
         nodes.join(contribs, col("node") === col("dst"), "left")
           .crossJoin(dangDf)
           .select(col("node"), col("__seed"),
             (lit(1.0 - damping) * seedShare + lit(damping) *
               (coalesce(col("s"), lit(0L)).cast("double") / Q
                 + col("__dang").cast("double") / Q * seedShare)).as("rank")))
-      Lineage.release(ranks, deleteFiles = true)
+      CacheRegistry.free(ranks, deleteFiles = true)
       ranks = next
     }
-    Lineage.release(e, deleteFiles = true)
+    CacheRegistry.free(e, deleteFiles = true)
     outdeg.unpersist(blocking = false)
     val out = ranks.select("node", "rank")
     nodes.unpersist(blocking = false)
@@ -264,19 +254,17 @@ object Graph {
     */
   private def orientedTriangles(edges: DataFrame, srcCol: String,
       dstCol: String): (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
     // canonical undirected pairs: a < b, self-loops out, both-direction
     // inputs collapse — one distinct shuffle keyed on the pair.
     // PERSISTED (CacheRegistry-tracked): und backs the degree agg plus
     // both orientation joins, and oriented backs three frames — without
     // the pins every branch re-derives the whole upstream edge pipeline
     // (for spanLinkEdges: the chunk+md5 self-join) once per reference
-    val und = CacheRegistry.track(edges
+    val und = CacheRegistry.persist(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .distinct())
     val deg = und.select(col("a").as("node"))
       .union(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -284,14 +272,13 @@ object Graph {
     // re-derives π-order between two out-neighbors without re-joining deg
     val aLower = col("__da") < col("__db") ||
       (col("__da") === col("__db") && col("a") < col("b"))
-    val oriented = CacheRegistry.track(und
+    val oriented = CacheRegistry.persist(und
       .join(deg.select(col("node").as("a"), col("deg").as("__da")), "a")
       .join(deg.select(col("node").as("b"), col("deg").as("__db")), "b")
       .select(
         when(aLower, col("a")).otherwise(col("b")).as("u"),
         when(aLower, col("b")).otherwise(col("a")).as("v"),
-        when(aLower, col("__db")).otherwise(col("__da")).as("__dv"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+        when(aLower, col("__db")).otherwise(col("__da")).as("__dv")))
     // eager fill before the fan-out: three racing consumers on an
     // unfilled cache would each run the orientation joins themselves
     // (the lshNearDup AQE cache-race note)
@@ -355,23 +342,19 @@ object Graph {
       newEdges: DataFrame,
       srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     def canon(df: DataFrame) = df
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-    val oldC = CacheRegistry.track(
-      canon(oldEdges).persist(StorageLevel.MEMORY_AND_DISK))
+    val oldC = CacheRegistry.persist(canon(oldEdges))
     // an "appended" edge already present in the old graph creates nothing
-    val newC = CacheRegistry.track(
-      canon(newEdges).join(oldC, Seq("a", "b"), "left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val newC = CacheRegistry.persist(
+      canon(newEdges).join(oldC, Seq("a", "b"), "left_anti"))
     val union = oldC.unionByName(newC)
-    val adj = CacheRegistry.track(
+    val adj = CacheRegistry.persist(
       union.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(union.select(col("b").as("u"), col("a").as("v")))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .unionByName(union.select(col("b").as("u"), col("a").as("v"))))
     adj.count()
     // common neighbors of each new edge's endpoints in the UNION graph:
     // expand the LOWER-degree endpoint's adjacency once, then ONE
@@ -433,19 +416,16 @@ object Graph {
       dstCol: String = "dst",
       iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    val und = cut(edges
+    val und = CacheRegistry.cut(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct())
-    val adj = CacheRegistry.track(
+    val adj = CacheRegistry.persist(
       und.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(und.select(col("b").as("u"), col("a").as("v")))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .unionByName(und.select(col("b").as("u"), col("a").as("v"))))
     adj.count()
-    val nodes = CacheRegistry.track(
-      adj.select(col("u").as("node")).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val nodes = CacheRegistry.persist(adj.select(col("u").as("node")).distinct())
     var labels = nodes.withColumn("label", col("node"))
     for (_ <- 0 until iters) {
       // neighbor label counts: one join keyed on the edge source, one
@@ -460,14 +440,14 @@ object Graph {
       val winners = counts.groupBy("node")
         .agg(max(struct(col("__c"), (-col("label")).as("__nl"))).as("__w"))
         .select(col("node"), (-col("__w.__nl")).as("__new"))
-      val next = cut(
+      val next = CacheRegistry.cut(
         labels.join(winners, Seq("node"), "left")
           .select(col("node"),
             coalesce(col("__new"), col("label")).as("label")))
-      Lineage.release(labels, deleteFiles = true)
+      CacheRegistry.free(labels, deleteFiles = true)
       labels = next
     }
-    Lineage.release(und, deleteFiles = true)
+    CacheRegistry.free(und, deleteFiles = true)
     adj.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     labels
@@ -502,21 +482,20 @@ object Graph {
       seedCol: String = "node",
       maxDepth: Int = 10): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 64, s"maxDepth: $maxDepth")
-    val und = cut(edges
+    val und = CacheRegistry.cut(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct())
-    val adj = CacheRegistry.track(
+    val adj = CacheRegistry.persist(
       und.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(und.select(col("b").as("u"), col("a").as("v")))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .unionByName(und.select(col("b").as("u"), col("a").as("v"))))
     adj.count()
     // seeds restricted to graph nodes: a seed outside the graph has no
     // edges to relax through and would report dist 0 for a node that
     // isn't a node — match the q_ppr seed convention (ignored)
     val nodes = adj.select(col("u").as("node")).distinct()
-    var settled = cut(
+    var settled = CacheRegistry.cut(
       seeds.select(col(seedCol).as("node")).distinct()
         .join(nodes, Seq("node"), "left_semi")
         .withColumn("dist", lit(0)))
@@ -526,21 +505,21 @@ object Graph {
     while (depth < maxDepth && frontierSize > 0L) {
       // expand the FRONTIER only; already-settled nodes keep their
       // (necessarily smaller) distance via the anti-join
-      val next = cut(
+      val next = CacheRegistry.cut(
         adj.join(frontier.select(col("node").as("u"), col("dist")), "u")
           .groupBy(col("v").as("node"))
           .agg((min(col("dist")) + 1).as("dist"))
           .join(settled, Seq("node"), "left_anti"))
-      val grown = cut(settled.unionByName(next))
-      Lineage.release(settled, deleteFiles = false)
-      if (depth > 0) Lineage.release(frontier, deleteFiles = false)
+      val grown = CacheRegistry.cut(settled.unionByName(next))
+      CacheRegistry.free(settled, deleteFiles = false)
+      if (depth > 0) CacheRegistry.free(frontier, deleteFiles = false)
       settled = grown
       frontier = next
       frontierSize = frontier.count()
       depth += 1
     }
     adj.unpersist(blocking = false)
-    Lineage.release(und, deleteFiles = true)
+    CacheRegistry.free(und, deleteFiles = true)
     settled
   }
 
@@ -596,19 +575,18 @@ object Graph {
         s"ssspCosts: fractional weights (max frac part ${wchk.getDouble(3)}) — " +
           "costs are exact integer sums; pre-scale to integers")
     }
-    val und = cut(edges
+    val und = CacheRegistry.cut(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"),
         col(weightCol).cast("long").as("w"))
       .filter(col("a") =!= col("b"))
       .groupBy("a", "b").agg(min(col("w")).as("w")))
-    val adj = CacheRegistry.track(
+    val adj = CacheRegistry.persist(
       und.select(col("a").as("u"), col("b").as("v"), col("w"))
-        .unionByName(und.select(col("b").as("u"), col("a").as("v"), col("w")))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .unionByName(und.select(col("b").as("u"), col("a").as("v"), col("w"))))
     adj.count()
     val nodes = adj.select(col("u").as("node")).distinct()
-    var dist = cut(
+    var dist = CacheRegistry.cut(
       seeds.select(col(seedCol).as("node")).distinct()
         .join(nodes, Seq("node"), "left_semi")
         .withColumn("cost", lit(0L)))
@@ -620,22 +598,22 @@ object Graph {
         .join(frontier.select(col("node").as("u"), col("cost")), "u")
         .groupBy(col("v").as("node"))
         .agg(min(col("cost") + col("w")).as("__c"))
-      val improved = cut(cand
+      val improved = CacheRegistry.cut(cand
         .join(dist.select(col("node"), col("cost").as("__old")), Seq("node"), "left")
         .filter(col("__old").isNull || col("__c") < col("__old"))
         .select(col("node"), col("__c").as("cost")))
-      val grown = cut(
+      val grown = CacheRegistry.cut(
         dist.join(improved.select("node"), Seq("node"), "left_anti")
           .unionByName(improved))
-      Lineage.release(dist, deleteFiles = false)
-      if (round > 0) Lineage.release(frontier, deleteFiles = false)
+      CacheRegistry.free(dist, deleteFiles = false)
+      if (round > 0) CacheRegistry.free(frontier, deleteFiles = false)
       dist = grown
       frontier = improved
       improvedCnt = frontier.count()
       round += 1
     }
     adj.unpersist(blocking = false)
-    Lineage.release(und, deleteFiles = true)
+    CacheRegistry.free(und, deleteFiles = true)
     dist
   }
 
@@ -666,7 +644,7 @@ object Graph {
       dstCol: String = "dst", maxIters: Int = 100): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxIters >= 1)
-    var und = cut(edges
+    var und = CacheRegistry.cut(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
@@ -682,31 +660,31 @@ object Graph {
         // materialize the (empty) result before releasing its input cut —
         // a lazy frame over deleted checkpoint files fails at the
         // caller's first action
-        val out = cut(deg.filter(col("deg") >= k))
-        Lineage.release(und, deleteFiles = true)
+        val out = CacheRegistry.cut(deg.filter(col("deg") >= k))
+        CacheRegistry.free(und, deleteFiles = true)
         return out
       }
-      val next = cut(und
+      val next = CacheRegistry.cut(und
         .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
         .select("a", "b"))
       val m = next.count()
       if (m == prevEdges) {
         // fixpoint: every remaining node already has deg >= k
-        Lineage.release(next, deleteFiles = true)
+        CacheRegistry.free(next, deleteFiles = true)
         val core = deg.filter(col("deg") >= k)
         // materialize before releasing the backing cut (the caller's
         // frame must not read a released checkpoint)
-        val out = cut(core)
-        Lineage.release(und, deleteFiles = true)
+        val out = CacheRegistry.cut(core)
+        CacheRegistry.free(und, deleteFiles = true)
         return out
       }
-      Lineage.release(und, deleteFiles = true)
+      CacheRegistry.free(und, deleteFiles = true)
       und = next
       prevEdges = m
       iters += 1
     }
-    Lineage.release(und, deleteFiles = true)
+    CacheRegistry.free(und, deleteFiles = true)
     throw new IllegalStateException(
       s"kCore did not converge in $maxIters rounds — peel depth exceeds " +
         "the guard; raise maxIters")
@@ -753,9 +731,8 @@ object Graph {
   def coOccurrenceEdges(df: DataFrame, groupCol: String, itemCol: String,
       maxItemsPerGroup: Int = 64): DataFrame = {
     require(maxItemsPerGroup >= 2)
-    val gi = CacheRegistry.track(
-      df.select(col(groupCol).as("__g"), col(itemCol).as("__i")).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val gi = CacheRegistry.persist(
+      df.select(col(groupCol).as("__g"), col(itemCol).as("__i")).distinct())
     gi.count() // the linking agg and both self-join sides read it
     val linking = gi.groupBy("__g").agg(count(lit(1)).as("__ni"))
       .filter(col("__ni") > 1 && col("__ni") <= maxItemsPerGroup)
@@ -795,14 +772,13 @@ object Graph {
       df: DataFrame, basketCol: String, itemCol: String,
       minSupportCount: Int = 2, maxItemsPerBasket: Int = 64): DataFrame = {
     require(minSupportCount >= 1 && maxItemsPerBasket >= 2)
-    val bi = CacheRegistry.track(
+    val bi = CacheRegistry.persist(
       df.select(col(basketCol).as("__b"), col(itemCol).as("__i")).distinct()
         .join(
           df.select(col(basketCol).as("__b"), col(itemCol).as("__i")).distinct()
             .groupBy("__b").agg(count(lit(1)).as("__ni"))
             .filter(col("__ni") <= maxItemsPerBasket).select("__b"),
-          Seq("__b"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+          Seq("__b")))
     bi.count() // N, item counts, and both pair-join sides read it
     val nBaskets = bi.agg(countDistinct(col("__b")).as("__N"))
     val itemCnt = bi.groupBy("__i").agg(count(lit(1)).as("__n"))
@@ -862,12 +838,11 @@ object Graph {
       srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
     require(maxDegree >= 2 && minCommon >= 1)
-    val und = CacheRegistry.track(edges
+    val und = CacheRegistry.persist(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .distinct())
     und.count() // eager: degrees, adjacency, and the anti-join all read it
     val deg = und.select(col("a").as("node"))
       .union(und.select(col("b").as("node")))
@@ -937,11 +912,11 @@ object Graph {
       p: Int = 8, corrected: Boolean = false): DataFrame = {
     require(maxHops >= 1 && maxHops <= 8,
       s"maxHops must be in [1,8] (fixed small hop counts), got $maxHops")
-    val e = cut(edges.select(col("src"), col("dst"))
+    val e = CacheRegistry.cut(edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct())
     val nodes = e.select(col("src").as("node")).distinct()
-    var state = cut(Sketches.hllRegistersBy(
+    var state = CacheRegistry.cut(Sketches.hllRegistersBy(
       nodes.withColumn("__item", col("node").cast("string")),
       "__item", p, Seq("node")))
     val perHop = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -950,13 +925,13 @@ object Graph {
           state.select(col("node").as("dst"), col("idx"), col("mrho")), "dst")
         .select(col("src").as("node"), col("idx"), col("mrho"))
       val prev = state
-      state = cut(prev.unionByName(nbr)
+      state = CacheRegistry.cut(prev.unionByName(nbr)
         .groupBy("node", "idx").agg(max(col("mrho")).as("mrho")))
-      Lineage.release(prev)
+      CacheRegistry.free(prev)
       // the per-hop readout is CUT (nodes-sized) before the next round
       // releases the register state it reads — a lazy finalize over a
       // released checkpoint could not recompute
-      perHop += cut(Sketches.hllFinalizeBy(state, p, Seq("node"))
+      perHop += CacheRegistry.cut(Sketches.hllFinalizeBy(state, p, Seq("node"))
         .select(lit(h).as("h"), col("node"), col("n_registers_used"),
           col("s_fixed"), col("est_distinct").as("est_reach")))
     }

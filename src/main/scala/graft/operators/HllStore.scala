@@ -80,7 +80,7 @@ object HllStore {
     val m = readMeta(spark, dir)
     // touched windows ride the write itself as an Observation (a
     // windows-sized collect_set evaluated inline with the write job) —
-    // the prior Lineage.cut + separate distinct/collect cost a full
+    // the prior CacheRegistry.cut + separate distinct/collect cost a full
     // extra materialization per append, pure fixed overhead at store
     // cadence (r15 verdict task 7)
     val obs = org.apache.spark.sql.Observation()

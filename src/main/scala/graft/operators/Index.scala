@@ -56,16 +56,13 @@ object Index {
     */
   def phraseSearch(docs: DataFrame, phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty, "phrase must have at least one token")
-    import org.apache.spark.storage.StorageLevel
     // persisted + eagerly filled: every phrase word joins a
     // differently-filtered branch of this table — uncached, a k-word
     // phrase would re-run the tokenize + posexplode scan k times
-    val positions = docs
+    val positions = CacheRegistry.persist(docs
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("__t"))
       .select(col("doc_id"), posexplode_outer(col("__t")).as(Seq("pos", "term")))
-      .filter(col("term").isInCollection(phrase)) // pushed to the scan
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    CacheRegistry.track(positions)
+      .filter(col("term").isInCollection(phrase))) // pushed to the scan
     positions.count()
     val first = positions.filter(col("term") === phrase.head)
       .select(col("doc_id"), col("pos"))

@@ -239,10 +239,9 @@ object Linkage {
     // subtrees would break silently under spark.sql.exchange.reuse=false
     // (deterministicShuffle's md5-prefix bucket is data-derived and
     // immune; a sampled partition id is not)
-    val ranged = CacheRegistry.track(slim
+    val ranged = CacheRegistry.persist(slim
       .repartitionByRange(col(sortCol), col(idCol))
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .withColumn("__pid", spark_partition_id()))
     ranged.count()
     // per-partition rank + broadcast offsets = global rank; the window
     // below partitions by __pid, i.e. range-partition-sized, never global
@@ -255,11 +254,10 @@ object Linkage {
           Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)),
           lit(0L)))
       .select("__pid", "__off")
-    val ranked = CacheRegistry.track(local
+    val ranked = CacheRegistry.persist(local
       .join(broadcast(offsets), "__pid")
       .withColumn("__r", col("__local") + col("__off") - 1)
-      .select(col(idCol), col(sortCol), col(textCol), col("__r"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .select(col(idCol), col(sortCol), col(textCol), col("__r")))
     val a = ranked.select(col(idCol).as("id_a"), col(textCol).as("__ta"),
       col("__r").as("__ra"), (col("__r") / w).cast("long").as("__blk"))
     val bBase = ranked.select(col(idCol).as("id_b"), col(textCol).as("__tb"),

@@ -92,9 +92,8 @@ object LshIndex {
     * bucket build and sig write / estimate sides).
     */
   private def encode(docs: DataFrame, m: Meta): (DataFrame, DataFrame) = {
-    val sigs = CacheRegistry.track(
-      Dedup.minHashSignaturesPortable(docs, m.numHashes, m.shingleSize)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val sigs = CacheRegistry.persist(
+      Dedup.minHashSignaturesPortable(docs, m.numHashes, m.shingleSize))
     val buckets = Dedup.portableBandBuckets(sigs, m.numHashes, m.bands)
       .withColumn("shard", pmod(xxhash64(col("bucket")), lit(m.nShards)))
     (sigs, buckets)
@@ -182,11 +181,10 @@ object LshIndex {
     val dir = StoreGen.resolve(dir0, spark)
     val m = readMeta(spark, dir)
     // persisted: both pairsFromIdLists branches scan the lists
-    val lists = CacheRegistry.track(
+    val lists = CacheRegistry.persist(
       servingBuckets(spark, dir).groupBy("bucket")
         .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-        .filter(size(col("ids")) > 1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .filter(size(col("ids")) > 1))
     val candidates = Dedup.pairsFromIdLists(lists, "bucket", pairListCutoff)
       .distinct()
     Dedup.portableEstJaccard(
@@ -250,8 +248,7 @@ object LshIndex {
     val dir = StoreGen.resolve(dir0, spark)
     val m = readMeta(spark, dir)
     val (bsigs, bbucketsRaw) = encode(batch, m)
-    val bbuckets = CacheRegistry.track(bbucketsRaw
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val bbuckets = CacheRegistry.persist(bbucketsRaw)
     // touched shards: ≤ nShards values (codebook-bounded, like the IVF
     // probe's centroid list) — the partition-pruning IN filter below
     val touched = bbuckets.select("shard").distinct()
@@ -267,11 +264,10 @@ object LshIndex {
       .select(least(col("__sid"), col("__bid")).as("doc_id_a"),
         greatest(col("__sid"), col("__bid")).as("doc_id_b"))
       .filter(col("doc_id_a") =!= col("doc_id_b"))
-    val intraLists = CacheRegistry.track(
+    val intraLists = CacheRegistry.persist(
       bbuckets.groupBy("bucket")
         .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-        .filter(size(col("ids")) > 1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .filter(size(col("ids")) > 1))
     val intra = Dedup.pairsFromIdLists(intraLists, "bucket", pairListCutoff)
     val candidates = cross.union(intra).distinct()
     val allSigs = readSigs(spark, dir, m.numHashes).unionByName(bsigs)
@@ -300,38 +296,38 @@ object LshIndex {
   def ingestDedup(spark: SparkSession, batch: DataFrame, dir0: String,
       threshold: Double = 0.5): DataFrame = {
     val dir = StoreGen.resolve(dir0, spark)
-    val __mk = CacheRegistry.mark(spark)
-    val pairs = probe(spark, batch, dir, threshold)
-    val bids = batch.select(col("doc_id"))
-    // each pair read from BOTH ends, then per-doc partner accounting;
-    // pair volume is duplication-proportional (the probe's contract)
-    val sym = pairs
-      .select(col("doc_id_b").as("doc_id"), col("doc_id_a").as("partner"))
-      .unionByName(pairs
-        .select(col("doc_id_a").as("doc_id"), col("doc_id_b").as("partner")))
-    // batch ids broadcast twice (id-only frames): keep batch-side rows,
-    // classify each partner as store or batch
-    val flags = sym
-      .join(broadcast(bids), Seq("doc_id"), "left_semi")
-      .join(broadcast(bids.select(col("doc_id").as("partner"))
-        .withColumn("__inb", lit(true))), Seq("partner"), "left")
-      .groupBy("doc_id")
-      .agg(
-        sum(when(col("__inb").isNull, 1L).otherwise(0L)).as("n_store_dups"),
-        sum(when(col("__inb").isNotNull && col("partner") < col("doc_id"),
-          1L).otherwise(0L)).as("n_batch_dups"))
-    val audited = batch.select(col("doc_id"), col("text"))
-      .join(flags, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("text"),
-        coalesce(col("n_store_dups"), lit(0L)).as("n_store_dups"),
-        coalesce(col("n_batch_dups"), lit(0L)).as("n_batch_dups"))
-      .withColumn("dropped",
-        col("n_store_dups") > 0 || col("n_batch_dups") > 0)
-    // answer-sized (one row per batch doc); materialized so the append
-    // below and the caller's reads never recompute the probe
-    val out = audited.localCheckpoint(true)
-    append(spark, out.filter(!col("dropped")).select("doc_id", "text"), dir)
-    CacheRegistry.releaseSince(spark, __mk)
-    out
+    CacheRegistry.scoped(spark) {
+      val pairs = probe(spark, batch, dir, threshold)
+      val bids = batch.select(col("doc_id"))
+      // each pair read from BOTH ends, then per-doc partner accounting;
+      // pair volume is duplication-proportional (the probe's contract)
+      val sym = pairs
+        .select(col("doc_id_b").as("doc_id"), col("doc_id_a").as("partner"))
+        .unionByName(pairs
+          .select(col("doc_id_a").as("doc_id"), col("doc_id_b").as("partner")))
+      // batch ids broadcast twice (id-only frames): keep batch-side rows,
+      // classify each partner as store or batch
+      val flags = sym
+        .join(broadcast(bids), Seq("doc_id"), "left_semi")
+        .join(broadcast(bids.select(col("doc_id").as("partner"))
+          .withColumn("__inb", lit(true))), Seq("partner"), "left")
+        .groupBy("doc_id")
+        .agg(
+          sum(when(col("__inb").isNull, 1L).otherwise(0L)).as("n_store_dups"),
+          sum(when(col("__inb").isNotNull && col("partner") < col("doc_id"),
+            1L).otherwise(0L)).as("n_batch_dups"))
+      val audited = batch.select(col("doc_id"), col("text"))
+        .join(flags, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("text"),
+          coalesce(col("n_store_dups"), lit(0L)).as("n_store_dups"),
+          coalesce(col("n_batch_dups"), lit(0L)).as("n_batch_dups"))
+        .withColumn("dropped",
+          col("n_store_dups") > 0 || col("n_batch_dups") > 0)
+      // answer-sized (one row per batch doc); materialized so the append
+      // below and the caller's reads never recompute the probe
+      val out = audited.localCheckpoint(true)
+      append(spark, out.filter(!col("dropped")).select("doc_id", "text"), dir)
+      out
+    }
   }
 }

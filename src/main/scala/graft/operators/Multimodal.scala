@@ -633,13 +633,12 @@ object Multimodal {
     // sides of the candidate join — unpinned, each consumer would re-run
     // the upstream hash derivation (for imageAHash: the whole
     // synthesize/decode chain) per reference
-    val bk = CacheRegistry.track(hashes
+    val bk = CacheRegistry.persist(hashes
       .select(col("doc_id"), col(hashCol).as("phash"))
       .select(col("doc_id"), col("phash"),
       posexplode(array((0 until bands).map(i =>
         shiftrightunsigned(col("phash"), i * width).bitwiseAND(lit(mask))): _*))
-        .as(Seq("band", "key")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .as(Seq("band", "key"))))
     bk.count()
     val open = bk.groupBy("band", "key").agg(count(lit(1)).as("__n"))
       .filter(col("__n") <= maxBucket).select("band", "key")

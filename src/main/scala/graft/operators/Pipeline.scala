@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** End-to-end corpus curation — the composition a training-data pipeline
   * actually runs, as ONE lazy plan:
@@ -81,7 +80,7 @@ object Pipeline {
     // persisted: consumed by the pair generator, the cluster label
     // universe, and the survivor semi-join — three pipeline re-runs of the
     // two semi-joins above otherwise
-    val cached = CacheRegistry.track(deduped.persist(StorageLevel.MEMORY_AND_DISK))
+    val cached = CacheRegistry.persist(deduped)
 
     // 3. near-dup drop: pairs → connected components → keep cluster minima
     val clusters = Dedup.dedupClusters(cached,

@@ -85,22 +85,18 @@ object Pq {
     */
   def pqCodebooksTrained(corpus: DataFrame, m: Int, ksub: Int, dim: Int,
       iters: Int = 2, idOffset: Long = 0L): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(iters >= 0, "iters must be non-negative")
     val spark = corpus.sparkSession
     import spark.implicits._
     val Qm = 1L << 20
 
     // persisted: the assignment pass re-scans both per iteration
-    val sv = CacheRegistry.track(
-      subvectors(corpus, "vec_id", "vec_id", m, dim)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val qsv = CacheRegistry.track(sv
+    val sv = CacheRegistry.persist(subvectors(corpus, "vec_id", "vec_id", m, dim))
+    val qsv = CacheRegistry.persist(sv
       .select(col("vec_id"), col("subspace"), posexplode_outer(col("sub_emb")))
       .filter(col("pos").isNotNull) // Dedup.safeExplodeNote
       .select(col("vec_id"), col("subspace"), col("pos"),
-        floor(col("col").cast("double") * Qm + 0.5).cast("long").as("q"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+        floor(col("col").cast("double") * Qm + 0.5).cast("long").as("q")))
 
     var cents: Seq[(Int, Long, Seq[Float])] =
       pqCodebooks(corpus, m, ksub, dim, idOffset).collect()
@@ -309,12 +305,11 @@ object Pq {
     val spark = corpus.sparkSession
     import spark.implicits._
 
-    val ranked = CacheRegistry.track(
+    val ranked = CacheRegistry.persist(
       withExactCosine(
           approxRanked(corpus, queries, m, ksub, dim, codebooks,
             k * rerankFactors.max),
-          corpus, queries)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          corpus, queries))
     ranked.count() // one fill for every rf's consumer
 
     val rfs = broadcast(rerankFactors.toDF("rerank_factor"))

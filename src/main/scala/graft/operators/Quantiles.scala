@@ -78,8 +78,7 @@ object Quantiles {
     // Persist + count the stats table to size-gate the broadcast (one
     // cheap pass over the tiny agg result; the cache keeps the join from
     // re-running the stats aggregation).
-    val statsC = CacheRegistry.track(
-      stats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val statsC = CacheRegistry.persist(stats)
     val statsR = statsC.withColumnRenamed(groupCol, "__g")
     val statsSide =
       if (statsC.count() <= broadcastGroupCap) broadcast(statsR) else statsR
@@ -357,7 +356,6 @@ object Quantiles {
     require(p > 0.0 && p <= 1.0, s"p must be in (0, 1], got $p")
     require(bins >= 2, s"bins must be >= 2, got $bins")
     require(cutoff >= 1, s"cutoff must be >= 1, got $cutoff")
-    import org.apache.spark.storage.StorageLevel
     val gc = groupCols.map(col)
     val v = col(valueCol).cast("double")
     val base = df.filter(v.isNotNull)
@@ -376,7 +374,7 @@ object Quantiles {
 
     val rank = greatest(ceil(lit(p) * col("__n")).cast("long"), lit(1L))
     val nfin = col("__n") - col("__nneg") - col("__npos") - col("__nnan")
-    var state = g0.select(
+    var state = CacheRegistry.persist(g0.select(
         gc ++ Seq(
           col("__n"),
           (rank - col("__nneg")).as("__need"),
@@ -386,9 +384,7 @@ object Quantiles {
           when(rank <= col("__nneg"), lit(Double.NegativeInfinity))
             .when(rank > col("__nneg") + nfin + col("__npos"), lit(Double.NaN))
             .when(rank > col("__nneg") + nfin, lit(Double.PositiveInfinity))
-            .as("__res")): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    CacheRegistry.track(state)
+            .as("__res")): _*))
     val nGroups = state.count()
 
     // a group stays in the round loop only while equal-width bucketing
@@ -440,9 +436,7 @@ object Quantiles {
           col("__bmn").as("__lo"), col("__bmx").as("__hi"),
           col("__c").as("__cnt"),
           lit(null).cast("double").as("__res")): _*)
-      val newState = state.filter(!activeCond).unionByName(stepped)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      CacheRegistry.track(newState)
+      val newState = CacheRegistry.persist(state.filter(!activeCond).unionByName(stepped))
       // ONE action per round: materializes the new state AND decides
       // termination; the old state's cache is dropped immediately
       nActive = newState.filter(activeCond).count()
@@ -474,9 +468,7 @@ object Quantiles {
       .filter(col("__cum") >= col("__need"))
       .groupBy(gc: _*)
       .agg(max(col("__n")).as("n"), min(col("__v")).as("quantile"))
-    val out = done.unionByName(point).unionByName(finished)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    CacheRegistry.track(out)
+    val out = CacheRegistry.persist(done.unionByName(point).unionByName(finished))
     // loud completeness check: every group that entered pass 0 must
     // report exactly once (a group silently dropped by a join bug would
     // otherwise under-report)

@@ -34,17 +34,14 @@ object Retrieval {
       vectors: DataFrame,
       queryMaxId: Long,
       k: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     // fixed-point LONG substrate (was DECIMAL(18,4)) — the exact
     // scaled-integer convention proven in [[Tfidf.sparseCosinePairs]]:
     // 4dp weights scale to exact integers, products/sums stay exact
     // longs (doc-length-bounded, corpus-size-independent), fl(S)/1e8
     // reproduces the decimal→double cast bit-for-bit, and the sums are
     // order-free because they are integer arithmetic
-    val w = vectors.select(col("doc_id"), col("term"),
-        round(col("tfidf") * lit(1e4), 0).cast("long").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    CacheRegistry.track(w)
+    val w = CacheRegistry.persist(vectors.select(col("doc_id"), col("term"),
+        round(col("tfidf") * lit(1e4), 0).cast("long").as("w")))
     val norms = w.groupBy("doc_id")
       .agg(sqrt(sum(col("w") * col("w")).cast("double") / lit(1e8))
         .as("__norm"))
@@ -145,15 +142,13 @@ object Retrieval {
     */
   private def bm25Stats(
       docs: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
     val toks = Parallelism.ensure(docs
         .select(col("doc_id").cast("long").as("doc_id"), col("text")))
       .select(col("doc_id"),
         explode_outer(TextAnalysis.tokens(col("text"))).as("term"))
       .filter(col("term").isNotNull) // Dedup.safeExplodeNote
-    val tfc = CacheRegistry.track(
-      toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val tfc = CacheRegistry.persist(
+      toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val dl = tfc.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
     val stats = broadcast(dl.agg(
       count(lit(1)).cast("double").as("__n"),
@@ -441,12 +436,9 @@ object Retrieval {
       k: Int = 3,
       lambda: Double = 0.7): DataFrame = {
     require(k >= 1 && m >= k, s"need m >= k >= 1, got m=$m k=$k")
-    import org.apache.spark.storage.StorageLevel
-    val rel = Similarity.bruteForceTopK(
+    val rel = CacheRegistry.persist(Similarity.bruteForceTopK(
         embeddings, embeddings.filter(col("vec_id") < nQueries), m)
-      .select(col("query_id"), col("vec_id"), col("cos_sim").as("__rel"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    CacheRegistry.track(rel)
+      .select(col("query_id"), col("vec_id"), col("cos_sim").as("__rel")))
     // pairwise sims within each query's candidate set: |Q|·m² rows, built
     // once — the loop below never touches an embedding again
     val withVec = rel.select("query_id", "vec_id")
@@ -455,12 +447,10 @@ object Retrieval {
       col("embedding").as("__ea"))
     val b = withVec.select(col("query_id"), col("vec_id").as("__vb"),
       col("embedding").as("__eb"))
-    val pairSims = a.join(b, Seq("query_id"))
+    val pairSims = CacheRegistry.persist(a.join(b, Seq("query_id"))
       .filter(col("__va") =!= col("__vb"))
       .select(col("query_id"), col("__va"), col("__vb"),
-        round(Similarity.cosine(col("__ea"), col("__eb")), 4).as("__sim"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    CacheRegistry.track(pairSims)
+        round(Similarity.cosine(col("__ea"), col("__eb")), 4).as("__sim")))
 
     // each greedy step needs only the per-query ARGMAX — a k=1
     // BoundedTopK aggregate finishes it map-side (one row per query per

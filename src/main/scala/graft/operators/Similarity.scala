@@ -191,13 +191,11 @@ object Similarity {
       tables: Int = 8,
       bits: Int = 8,
       pairListCutoff: Int = 128): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     // vectors+norms persisted: re-read by both verification sides; tracked
     // in CacheRegistry so callers can release after consuming
-    val withN = CacheRegistry.track(
+    val withN = CacheRegistry.persist(
       embeddings.select(col("vec_id"), col("embedding"),
-        l2norm(col("embedding")).as("__norm"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+        l2norm(col("embedding")).as("__norm")))
     // bucket table carries (vec_id, bucket) ONLY — all per-vector sign
     // projections run in ONE native-expression pass, and no embedding rides
     // through the candidate join; table id folds into the bucket hash
@@ -296,7 +294,6 @@ object Similarity {
     */
   def trainCodebook(
       corpus: DataFrame, k: Int, iters: Int = 2): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val spark = corpus.sparkSession
     import spark.implicits._
     require(k > 0 && iters > 0)
@@ -306,15 +303,13 @@ object Similarity {
     // (means); fixed-point components materialize once. Parallelism.ensure:
     // a single-file embeddings scan would run every per-iteration
     // crossJoin-assignment pass (the heavy compute) on one core
-    val ev = CacheRegistry.track(
-      Parallelism.ensure(corpus.select(col("vec_id"), col("embedding")), "vec_id")
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val qv = CacheRegistry.track(ev
+    val ev = CacheRegistry.persist(
+      Parallelism.ensure(corpus.select(col("vec_id"), col("embedding")), "vec_id"))
+    val qv = CacheRegistry.persist(ev
       .select(col("vec_id"), posexplode_outer(col("embedding")))
       .filter(col("pos").isNotNull) // Dedup.safeExplodeNote
       .select(col("vec_id"), col("pos"),
-        floor(col("col").cast("double") * Q + 0.5).cast("long").as("q"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+        floor(col("col").cast("double") * Q + 0.5).cast("long").as("q")))
 
     // init = the k lowest-id vectors, whatever the id space — a
     // `vec_id < k` filter silently under-fills the codebook when ids
@@ -331,12 +326,11 @@ object Similarity {
       val centDf = broadcast(cents.toDF("c", "e"))
       // rank-1 assignment as the [[assignByScore]] aggregate: the
       // exchange carries one row per vector, not corpus × k sort rows
-      val assigned = CacheRegistry.track(
+      val assigned = CacheRegistry.persist(
         assignByScore(ev.crossJoin(centDf), Seq("vec_id"), "c",
           round(cosine(col("embedding"), col("e")), 6), 1, Seq.empty,
           centAlias = "c", scoreAlias = "__sc", rankName = "__rn")
-        .select(col("vec_id"), col("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .select(col("vec_id"), col("c")))
       // k×dim mean rows + k counts — the only driver-bound data
       val means = assigned.join(qv, "vec_id")
         .groupBy("c", "pos")
@@ -1082,7 +1076,6 @@ object Similarity {
       dim: Int = 64,
       predicate: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     require(nprobes.nonEmpty && nprobes.forall(_ >= 1), "nprobes must be >= 1")
-    import org.apache.spark.storage.StorageLevel
     // `predicate` sweeps the FILTERED search ([[ivfPqTopKFiltered]]):
     // the allowed set restricts both the probe's code scan and the
     // brute-force truth (recall of filtered-approx vs filtered-exact —
@@ -1091,15 +1084,13 @@ object Similarity {
     val allowed = predicate.map(p => corpus.filter(p).select("vec_id"))
     // probe_rank is constant over a (query, vec) pair's m subspace rows
     // (one centroid per corpus vector), so it rides the group-by keys
-    val approx = CacheRegistry.track(
+    val approx = CacheRegistry.persist(
       ivfPqApprox(spark, dir, queries, nprobes.max, m, dim,
-          Some("probe_rank"), allowedIds = allowed)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+          Some("probe_rank"), allowedIds = allowed))
     approx.count()
-    val exact = CacheRegistry.track(
+    val exact = CacheRegistry.persist(
       bruteForceTopK(predicate.fold(corpus)(corpus.filter), queries, k)
-        .select(col("query_id"), col("vec_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .select(col("query_id"), col("vec_id")))
     exact.count()
     val exactTotal = broadcast(exact.agg(count(lit(1)).as("exact_pairs")))
 
@@ -1235,7 +1226,6 @@ object Similarity {
       numCentroids: Int = 32,
       nprobes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
     require(nprobes.nonEmpty && nprobes.forall(_ >= 1), "nprobes must be >= 1")
-    import org.apache.spark.storage.StorageLevel
     val centroids = broadcastCentroids(pseudoCentroids(corpus, numCentroids))
 
     val assignedCorpus =
@@ -1247,17 +1237,15 @@ object Similarity {
     // candidates at the DEEPEST probe depth, each tagged with the probe
     // rank of the centroid it arrived through; persisted + eagerly filled
     // (one consumer per probe point — see the AQE cache-race note)
-    val scored = CacheRegistry.track(
+    val scored = CacheRegistry.persist(
       assignedCorpus.join(broadcast(assignedQueries), Seq("centroid_id"))
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"), col("probe_rank"),
           round(dot(col("q_emb"), col("embedding")) / (col("q_norm") * col("__norm")), 4)
-            .as("cos_sim"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+            .as("cos_sim")))
     scored.count()
-    val exact = CacheRegistry.track(
-      bruteForceTopK(corpus, queries, k).select(col("query_id"), col("vec_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val exact = CacheRegistry.persist(
+      bruteForceTopK(corpus, queries, k).select(col("query_id"), col("vec_id")))
     exact.count()
     val exactTotal = broadcast(exact.agg(count(lit(1)).as("exact_pairs")))
 
@@ -1306,7 +1294,6 @@ object Similarity {
       dims: Seq[Int]): DataFrame = {
     require(dims.nonEmpty && dims.forall(_ >= 1), "dims must be >= 1")
     require(dims.distinct.size == dims.size, s"duplicate dims: $dims")
-    import org.apache.spark.storage.StorageLevel
     def truncated(df: DataFrame, idCol: String, idAlias: String): DataFrame =
       dims.sorted.map { d =>
         df.select(lit(d).as("dim"), col(idCol).as(idAlias),
@@ -1327,9 +1314,8 @@ object Similarity {
           round(dot(col("q_emb"), col("embedding")) / (col("q_norm") * col("__norm")), 4)
             .as("cos_sim")),
       "cos_sim", k, groupCols = Seq("dim", "query_id"))
-    val exact = CacheRegistry.track(
-      bruteForceTopK(corpus, queries, k).select(col("query_id"), col("vec_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val exact = CacheRegistry.persist(
+      bruteForceTopK(corpus, queries, k).select(col("query_id"), col("vec_id")))
     exact.count()
     val exactTotal = broadcast(exact.agg(count(lit(1)).as("exact_pairs")))
     truncTopK
@@ -1474,12 +1460,11 @@ object Similarity {
     // would re-run the crossJoin+assignment otherwise; at sf0.1 the
     // A/B is wall-neutral (cache barrier ≈ re-execution cost on 2k rows)
     // but at corpus scale assignment is the expensive pass
-    val assigned = CacheRegistry.track(
+    val assigned = CacheRegistry.persist(
       assignByScore(ev.crossJoin(cents), Seq("vec_id"), "c",
         round(cosine(col("embedding"), col("e")), 6), 1, Seq("embedding"),
         centAlias = "cluster_id", scoreAlias = "__sc", rankName = "__rn")
-      .select(col("vec_id"), col("embedding"), col("cluster_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .select(col("vec_id"), col("embedding"), col("cluster_id")))
     val pairs = Dedup.embeddingNearDup(assigned, threshold, blockCol = "cluster_id")
     // pairs carry vec_id_a < vec_id_b, so the b side always has a
     // smaller-id near-dup → dropped
@@ -1554,7 +1539,6 @@ object Similarity {
     * product are order-identical.
     */
   def mutualNeighbors(embeddings: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     // Parallelism.ensure on the STREAM side of the all-pairs crossJoin:
     // every vector is a query here, so this stage does |corpus|² dot
     // products — a compact embeddings file arrives as ONE scan
@@ -1568,14 +1552,13 @@ object Similarity {
       "vec_id", "vec_id")
     val q = broadcast(c.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"), col("__norm").as("q_norm")))
-    val top1 = CacheRegistry.track(aggTopK(
+    val top1 = CacheRegistry.persist(aggTopK(
       c.crossJoin(q)
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"),
           round(dot(col("q_emb"), col("embedding")) / (col("q_norm") * col("__norm")), 4)
             .as("cos_sim")), 1)
-      .drop("rank")
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .drop("rank"))
     top1.count()
     top1.as("f")
       .join(top1.select(col("query_id").as("__bq"), col("vec_id").as("__bv")),
@@ -1614,13 +1597,11 @@ object Similarity {
       numCentroids: Int = 32,
       nprobe: Int = 4): DataFrame = {
     require(numCentroids >= 1 && nprobe >= 1)
-    import org.apache.spark.storage.StorageLevel
     val centroids = broadcastCentroids(pseudoCentroids(embeddings, numCentroids))
-    val assigned = CacheRegistry.track(
+    val assigned = CacheRegistry.persist(
       assignProbes(withNorm(embeddings, "vec_id", "vec_id"), centroids,
           nprobe, "__r")
-        .drop("__r")
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .drop("__r"))
     assigned.count() // both sides of the blocked pair join read it
     val q = assigned.select(col("centroid_id"), col("vec_id").as("query_id"),
       col("embedding").as("q_emb"), col("__norm").as("q_norm"))
@@ -1629,8 +1610,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id"),
         round(dot(col("q_emb"), col("embedding")) / (col("q_norm") * col("__norm")), 4)
           .as("cos_sim"))
-    val top1 = CacheRegistry.track(aggTopK(scored, 1).drop("rank")
-      .persist(StorageLevel.MEMORY_AND_DISK))
+    val top1 = CacheRegistry.persist(aggTopK(scored, 1).drop("rank"))
     top1.count()
     top1.as("f")
       .join(top1.select(col("query_id").as("__bq"), col("vec_id").as("__bv")),
@@ -1853,9 +1833,7 @@ object Similarity {
     require(k >= 1 && rerankFactors.nonEmpty && rerankFactors.forall(_ >= 1))
     require(rerankFactors.distinct.size == rerankFactors.size,
       s"duplicate rerank factors: $rerankFactors")
-    import org.apache.spark.storage.StorageLevel
-    val scored = CacheRegistry.track(
-      binaryScored(corpus, queries, dim).persist(StorageLevel.MEMORY_AND_DISK))
+    val scored = CacheRegistry.persist(binaryScored(corpus, queries, dim))
     scored.count()
     val exact = scored
       .withColumn("__er", row_number().over(Window.partitionBy("query_id")
@@ -1909,7 +1887,7 @@ object Similarity {
     require(k >= 2 && k <= 64, s"k must be in [2,64], got $k")
     val spark = emb.sparkSession
     import org.apache.spark.sql.Row
-    val base = Lineage.cut(
+    val base = CacheRegistry.cut(
       withNorm(emb, "vec_id", "vec_id").filter(col("__norm") > 0))
     // loud precondition instead of a bare NoSuchElementException from
     // the seed/argmax head() calls: k is range-checked above but the
@@ -1925,7 +1903,7 @@ object Similarity {
     }
     val seedRow = base.orderBy(col("vec_id").asc).head()
     var picks = List[(Long, Option[Double])]((seedRow.getAs[Long]("vec_id"), None))
-    var state = Lineage.cut(base
+    var state = CacheRegistry.cut(base
       .filter(col("vec_id") =!= seedRow.getAs[Long]("vec_id"))
       .withColumn("__md",
         distTo(seedRow.getAs[scala.collection.Seq[Float]]("embedding").toArray,
@@ -1941,12 +1919,12 @@ object Similarity {
       picks = (picked, Some(top.getAs[Double]("d"))) :: picks
       val pickedRow = base.filter(col("vec_id") === picked).head()
       val prev = state
-      state = Lineage.cut(prev
+      state = CacheRegistry.cut(prev
         .filter(col("vec_id") =!= picked)
         .withColumn("__md", least(col("__md"),
           distTo(pickedRow.getAs[scala.collection.Seq[Float]]("embedding").toArray,
             pickedRow.getAs[Double]("__norm")))))
-      Lineage.release(prev)
+      CacheRegistry.free(prev)
     }
     import spark.implicits._
     picks.reverse.zipWithIndex

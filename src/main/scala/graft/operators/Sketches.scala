@@ -230,12 +230,11 @@ object Sketches {
     // per occurrence; r7's 20 cpu-s was depth×md5×|tokens|) and the truth
     // top-k. Persisted + eagerly filled (two consumers — AQE cache-race
     // note); the vocab table is |vocab| rows, small under Zipf.
-    val vocab = CacheRegistry.track(
+    val vocab = CacheRegistry.persist(
       Parallelism.ensure(docs)
         .select(explode_outer(TextAnalysis.tokens(col("text"))).as("token"))
         .filter(col("token").isNotNull) // Dedup.safeExplodeNote
-        .groupBy("token").agg(count(lit(1)).as("occurrences"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .groupBy("token").agg(count(lit(1)).as("occurrences")))
     vocab.count()
     val cms = cmsTableWeighted(vocab, "token", "occurrences", depth, width, portable)
     val truth = vocab
@@ -490,9 +489,8 @@ object Sketches {
   def hllOverlapBy(reg: DataFrame, p: Int, groupCol: String,
       maxGroups: Int = 1024, corrected: Boolean = false): DataFrame = {
     require(p >= 4 && p <= 16, s"p must be in [4,16], got $p")
-    val folded = CacheRegistry.track(reg
-      .groupBy(col(groupCol), col("idx")).agg(max(col("mrho")).as("mrho"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val folded = CacheRegistry.persist(reg
+      .groupBy(col(groupCol), col("idx")).agg(max(col("mrho")).as("mrho")))
     val groups = folded.select(col(groupCol).as("__g")).distinct()
     val gCount = groups.count()
     require(gCount >= 2, s"hllOverlapBy: need >= 2 groups, got $gCount")
@@ -617,8 +615,7 @@ object Sketches {
     // part — and this composition reads it three times (group names +
     // both pair sides). Persist the tiny table, not the pipeline.
     // Tracked in CacheRegistry — callers release after consuming.
-    val cached = CacheRegistry.track(sketch
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val cached = CacheRegistry.persist(sketch)
     cached.count() // eager fill: three AQE consumers racing a lazy cache
                    // would each run the upstream pipeline
     val a = cached.select(col(groupCol).as("group_a"), col("hv"))
@@ -748,10 +745,9 @@ object Sketches {
     val g = groupCols.map(col)
     // persisted: the sketch feeds the candidate explode, the broadcast
     // size gate, and the per-group row of `groups`
-    val sketch = CacheRegistry.track(df.groupBy(g: _*).agg(
+    val sketch = CacheRegistry.persist(df.groupBy(g: _*).agg(
         GraftFunctions.mg_candidates(xxhash64(col(keyCol)), k).as("__cand"),
-        count(lit(1)).as("__n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        count(lit(1)).as("__n")))
     // null-safe group equality (the binnedQuantiles precedent): a null
     // group key must report like any group, as SQL's GROUP BY does
     val candCols = groupCols.indices.map(i => s"__g$i")
@@ -821,8 +817,7 @@ object Sketches {
         s"is too flat for this sketch width; widen k")
     // recount + rank the ≤ k candidates; the window partition is the
     // candidate set (sketch-sized), never the corpus
-    val counted = CacheRegistry.track(recount(df, keyCol, cands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val counted = CacheRegistry.persist(recount(df, keyCol, cands))
     val top = counted
       .orderBy(col("cnt").desc, col(keyCol).asc)
       .limit(topK)
@@ -877,14 +872,12 @@ object Sketches {
     val (counted0, groups) =
       groupedRecount(df, keyCol, groupCols, k, broadcastCandCap)
     // persisted: feeds the ranking AND the per-group completeness sum
-    val counted = CacheRegistry.track(counted0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val counted = CacheRegistry.persist(counted0)
     // candidate-sized window: ≤ k rows per group by construction
-    val ranked = CacheRegistry.track(counted
+    val ranked = CacheRegistry.persist(counted
       .withColumn("rank", row_number().over(
         Window.partitionBy(g: _*).orderBy(col("cnt").desc, col(keyCol).asc)))
-      .filter(col("rank") <= topK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .filter(col("rank") <= topK))
     // certificate frame: one row per group FROM THE SKETCH PASS (so a
     // group whose summary emptied — and thus recounts nothing — is
     // still judged, and judged uncertifiable), left-joined to the

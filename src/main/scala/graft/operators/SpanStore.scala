@@ -122,22 +122,19 @@ object SpanStore {
     require(minTokens > 1, s"minTokens must be > 1, got $minTokens")
     require(shardChars >= 1 && shardChars <= 4,
       s"shardChars must be in [1,4], got $shardChars")
-    val spark = docs.sparkSession
-    val __mk = CacheRegistry.mark(spark)
-    // withBloom fuses the sidecar build into the write: the store write
-    // and the word build share ONE fingerprint pass (the r16 IVFADC
-    // fused-guard precedent) instead of writeBloom re-reading the store
-    val fp =
-      if (withBloom)
-        CacheRegistry.track(fingerprints(docs, minTokens, shardChars)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      else fingerprints(docs, minTokens, shardChars)
-    try {
+    CacheRegistry.scoped(docs.sparkSession) {
+      // withBloom fuses the sidecar build into the write: the store write
+      // and the word build share ONE fingerprint pass (the r16 IVFADC
+      // fused-guard precedent) instead of writeBloom re-reading the store
+      val fp =
+        if (withBloom)
+          CacheRegistry.persist(fingerprints(docs, minTokens, shardChars))
+        else fingerprints(docs, minTokens, shardChars)
       graft.ParquetIO.writePartitioned(fp,
         dir, Seq("shard"), filesPerPartition, sortCols = Seq("span_md5"))
       StoreMeta.write(dir, "min_tokens" -> minTokens, "shard_chars" -> shardChars)
       if (withBloom) buildBloom(fp.select("shard", "span_md5"), dir)
-    } finally if (withBloom) CacheRegistry.releaseSince(spark, __mk)
+    }
   }
 
   /** Append a batch's fingerprints under the frozen geometry. When the
@@ -154,15 +151,13 @@ object SpanStore {
     val dir = StoreGen.resolve(dir0, spark)
     val (k, sc) = readGeometry(dir)
     val withBloom = updateBloom && hasBloom(dir)
-    val __mk = CacheRegistry.mark(spark)
-    // two writer jobs consume the fingerprints when the sidecar rides
-    // along — persist so tokenize+md5 runs once over the batch
-    val fp =
-      if (withBloom)
-        CacheRegistry.track(fingerprints(batch, k, sc)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      else fingerprints(batch, k, sc)
-    try {
+    CacheRegistry.scoped(spark) {
+      // two writer jobs consume the fingerprints when the sidecar rides
+      // along — persist so tokenize+md5 runs once over the batch
+      val fp =
+        if (withBloom)
+          CacheRegistry.persist(fingerprints(batch, k, sc))
+        else fingerprints(batch, k, sc)
       // SIDECAR FIRST (advisor r17): a crash between the two writer jobs
       // must not leave store prints absent from the Bloom — that would be
       // a silent false NEGATIVE (probe misses real duplicates). Writing
@@ -180,7 +175,7 @@ object SpanStore {
       graft.ParquetIO.writePartitioned(fp, dir,
         Seq("shard"), filesPerPartition = 1, mode = "append",
         sortCols = Seq("span_md5"))
-    } finally if (withBloom) CacheRegistry.releaseSince(spark, __mk)
+    }
   }
 
   // ---- Bloom sidecar: store-scan-free admission of definitely-new prints
@@ -364,8 +359,7 @@ object SpanStore {
     // `bloomCandidatesPre` MUST be bloomMaybe over its distinct prints
     // (both ideally persisted by the caller); answers are unchanged by
     // construction — the frames are the ones probe would derive itself.
-    val bf = printsPre.getOrElse(CacheRegistry.track(fingerprints(batch, k, sc)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    val bf = printsPre.getOrElse(CacheRegistry.persist(fingerprints(batch, k, sc)))
     // Bloom admission (when the sidecar exists): clear definitely-new
     // prints BEFORE any store planning, so both the shard IN-list and
     // the semi-join key set shrink to possible-duplicates only — a
@@ -373,10 +367,9 @@ object SpanStore {
     // unchanged: Bloom positives still exact-verify against the store.
     val candidates =
       if (useBloom && hasBloom(dir))
-        bloomCandidatesPre.getOrElse(CacheRegistry.track(
+        bloomCandidatesPre.getOrElse(CacheRegistry.persist(
           bloomMaybe(spark, bf.select("shard", "span_md5").distinct(), dir,
-            broadcastWords = broadcastProbe)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+            broadcastWords = broadcastProbe)))
       else bf
     // partition-pruned store scan: only the shards this batch hashes to.
     // The shard universe is <= 16^shardChars values, so the collect is
@@ -500,26 +493,27 @@ object SpanStore {
     val dir = StoreGen.resolve(dir0, spark)
     require(minKeptFrac >= 0.0 && minKeptFrac <= 1.0,
       s"minKeptFrac must be in [0,1], got $minKeptFrac")
-    val __mk = CacheRegistry.mark(spark)
-    val (k, _) = readGeometry(dir)
-    val hits = probe(spark, batch, dir, broadcastProbe)
-    val trimmed = Dedup.trimSpans(
-      batch.select(col("doc_id").cast("long").as("doc_id"), col("text")),
-      anchorsToSpans(hits, k))
-    val audited = trimmed.withColumn("dropped",
-      when(col("n_tokens_before") === 0L, lit(true))
-        .otherwise(col("n_tokens_kept").cast("double")
-          / col("n_tokens_before") < minKeptFrac))
-    // one computation feeds both the store append and the returned
-    // audit: localCheckpoint materializes the curated batch (answer-
-    // sized: one row per batch doc) and cuts the probe lineage, so the
-    // append below and the caller's reads never recompute the probe
-    val out = audited.localCheckpoint(true)
-    append(spark, out.filter(!col("dropped")).select("doc_id", "text"), dir)
-    // the probe's tracked batch fingerprints served every consumer
-    // (trim + append ran eagerly above) — release them now so ingest
-    // cadence doesn't grow executor storage one cached frame per batch
-    CacheRegistry.releaseSince(spark, __mk)
-    out
+    // the probe's tracked batch fingerprints serve every consumer (trim +
+    // append run eagerly inside the scope) — the scope frees them so
+    // ingest cadence doesn't grow executor storage one cached frame per
+    // batch
+    CacheRegistry.scoped(spark) {
+      val (k, _) = readGeometry(dir)
+      val hits = probe(spark, batch, dir, broadcastProbe)
+      val trimmed = Dedup.trimSpans(
+        batch.select(col("doc_id").cast("long").as("doc_id"), col("text")),
+        anchorsToSpans(hits, k))
+      val audited = trimmed.withColumn("dropped",
+        when(col("n_tokens_before") === 0L, lit(true))
+          .otherwise(col("n_tokens_kept").cast("double")
+            / col("n_tokens_before") < minKeptFrac))
+      // one computation feeds both the store append and the returned
+      // audit: localCheckpoint materializes the curated batch (answer-
+      // sized: one row per batch doc) and cuts the probe lineage, so the
+      // append below and the caller's reads never recompute the probe
+      val out = audited.localCheckpoint(true)
+      append(spark, out.filter(!col("dropped")).select("doc_id", "text"), dir)
+      out
+    }
   }
 }

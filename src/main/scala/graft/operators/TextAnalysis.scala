@@ -218,9 +218,8 @@ object TextAnalysis {
     * into more re-runs; the sparseCosinePairs pathology).
     */
   private def bigramOccurrences(docs: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val tk = tokens(col("text"))
-    val bi = docs
+    val bi = CacheRegistry.persist(docs
       .select(col("doc_id"), tk.as("__t"))
       .select(col("doc_id"),
         when(size(col("__t")) >= 2,
@@ -228,9 +227,7 @@ object TextAnalysis {
           .otherwise(array().cast("array<struct<w1:string,w2:string>>")).as("__bi"))
       .select(col("doc_id"), explode_outer(col("__bi")).as("__b"))
       .filter(col("__b").isNotNull) // Dedup.safeExplodeNote
-      .select(col("doc_id"), col("__b.w1").as("w1"), col("__b.w2").as("w2"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    CacheRegistry.track(bi)
+      .select(col("doc_id"), col("__b.w1").as("w1"), col("__b.w2").as("w2")))
     bi.count()
     bi
   }

@@ -108,7 +108,6 @@ object Tfidf {
     require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
       s"maxDfFrac must be in (0, 1], got $maxDfFrac")
     require(maxDf >= 1, s"maxDf must be >= 1, got $maxDf")
-    import org.apache.spark.storage.StorageLevel
     // fixed-point LONG substrate (was DECIMAL(18,4); r20 stage profile —
     // the pair join+dot aggregate dominated the query and a decimal
     // product sum promotes to precision >18, i.e. BigDecimal-backed
@@ -124,10 +123,8 @@ object Tfidf {
     // pair-gen, both dot sides) — uncached, each re-runs the entire
     // upstream tfidf build (tokenize + two aggs + join); measured 5.8s ->
     // ~1.5s at sf0.1
-    val w = vectors.select(col("doc_id"), col("term"),
-      round(col("tfidf") * lit(1e4), 0).cast("long").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    CacheRegistry.track(w)
+    val w = CacheRegistry.persist(vectors.select(col("doc_id"), col("term"),
+      round(col("tfidf") * lit(1e4), 0).cast("long").as("w")))
     // NO eager w.count(): subDots' eager fill below is the first action
     // over w. Its query does hold several leaf stages that can scan w
     // cold concurrently (the df table, the join sides), but a cache-fill
@@ -167,15 +164,13 @@ object Tfidf {
     // downstream query (the over-cap completion's pair list and the final
     // dot join) — uncached, the generation join+agg would run twice and
     // the concurrent stages would race the lazy cache population
-    val subDots = wGen
+    val subDots = CacheRegistry.persist(wGen
       .select(col("doc_id").as("doc_id_a"), col("term"), col("w").as("wa"))
       .join(wGen.select(col("doc_id").as("doc_id_b"), col("term"), col("w").as("wb")),
         "term")
       .filter(col("doc_id_a") < col("doc_id_b"))
       .groupBy("doc_id_a", "doc_id_b")
-      .agg(sum(col("wa") * col("wb")).as("__dot_sub"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    CacheRegistry.track(subDots)
+      .agg(sum(col("wa") * col("wb")).as("__dot_sub")))
     subDots.count()
 
     // exact-dot completion: each surviving pair's OVER-cap shared terms

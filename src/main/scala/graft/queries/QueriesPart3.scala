@@ -106,15 +106,13 @@ private[graft] object QueriesPart3 {
       // the store): the representative ingest ratio, and the accounting
       // passes stay batch-sized
       val batch = docs.filter(col("doc_id") % 15 === 0)
-      val pr = CacheRegistry.track(operators.SpanStore.printsOf(s, batch, store)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val pr = CacheRegistry.persist(operators.SpanStore.printsOf(s, batch, store))
       // persisted: three consumers — the n_maybe join below plus the
       // probe's shard IN-list and semi-join key set (passed through the
       // reuse handles so the probe neither re-fingerprints the batch nor
       // re-runs the Bloom check it already has — r21, guide §6)
-      val maybe = CacheRegistry.track(operators.SpanStore.bloomMaybe(s,
-          pr.select("shard", "span_md5").distinct(), store)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val maybe = CacheRegistry.persist(operators.SpanStore.bloomMaybe(s,
+          pr.select("shard", "span_md5").distinct(), store))
       val hits = operators.SpanStore.probe(s, batch, store, // bloom path ON
         printsPre = Some(pr), bloomCandidatesPre = Some(maybe))
       val perDoc = pr.groupBy("doc_id")

@@ -295,10 +295,21 @@ private[graft] object QueriesPart4 {
         LinkRule("name_suffix", 1.5,
           (a, b) => substring(a("c_name"), -2, 2) === substring(b("c_name"), -2, 2)))
       // broadcastSide: 25 nations would cap a shuffled self-join at 25
-      // busy tasks; the broadcast join parallelizes over the scan
-      sortBarrier(Linkage.linkPairs(Tables.load(s, dir, "customer"),
+      // busy tasks; the broadcast join parallelizes over the scan.
+      // The persist under the sort is an exchange barrier (r20 profile):
+      // `orderBy` plans a range exchange whose partitioner SAMPLES its
+      // child RDD before the real pass, so a map-heavy tail with no
+      // exchange of its own (broadcast-join pair scoring, within-cluster
+      // similarity joins) executes twice per action — stage-profiled on
+      // q_fuzzy_pairs/q_semantic_dedup as two same-shape stages of equal
+      // CPU. A `repartition` does NOT survive: the optimizer elides a
+      // user shuffle directly under a global sort. Persisting the
+      // ANSWER-SIZED result lets the sampler's pass fill the cache and
+      // the sort's real pass read it back; row set and order are
+      // unchanged, and the registry releases it after the query.
+      CacheRegistry.persist(Linkage.linkPairs(Tables.load(s, dir, "customer"),
           "c_custkey", "c_nationkey", rules,
-          matchAt = 4.5, possibleAt = 3.5, broadcastSide = true), "id_a")
+          matchAt = 4.5, possibleAt = 3.5, broadcastSide = true))
         .orderBy("id_a", "id_b")
     }),
 
@@ -307,11 +318,12 @@ private[graft] object QueriesPart4 {
     // against the oracle engine's own jaro_winkler_similarity.
     // broadcastSide: 25 brand blocks would serialize the quadratic
     // scoring on 25 reducers; broadcasting the capped record slim lets
-    // the row-partitioned scan side use every core
+    // the row-partitioned scan side use every core; persisted under the
+    // sort as q_linkage's exchange barrier
     "q_fuzzy_pairs" -> ((s, dir) =>
-      sortBarrier(Linkage.fuzzyPairs(Tables.load(s, dir, "part"),
+      CacheRegistry.persist(Linkage.fuzzyPairs(Tables.load(s, dir, "part"),
           "p_partkey", "p_brand", "p_name", threshold = 0.9,
-          broadcastSide = true), "id_a")
+          broadcastSide = true))
         .orderBy("id_a", "id_b")),
 
     // hop-bounded weighted shortest paths over the span graph: cheapest
@@ -331,7 +343,7 @@ private[graft] object QueriesPart4 {
     // candidates whatever the value distribution, the complement of
     // q_fuzzy_pairs' blocking. Global rank = range partitions + offsets
     "q_snm_pairs" -> ((s, dir) =>
-      // NO sortBarrier here (measured r20): SNM's scoring tail is already
+      // NO exchange barrier here (measured r20): SNM's scoring tail is already
       // behind its own rank/offset exchanges and persists, so the
       // barrier's cache fill only added cost (A/B: 12.0 -> 12.6 cpu-s)
       Linkage.sortedNeighborhoodPairs(Tables.load(s, dir, "part"),
@@ -428,10 +440,11 @@ private[graft] object QueriesPart4 {
     // ≈ 0.48) — the plumbing is exercised with non-empty drops.
     // k=16/iters=1: SemDeDup needs only a rough partition of the space —
     // more clusters mean a more parallel (and smaller) pair join, and one
-    // training round halves the driver-synced k-means jobs
+    // training round halves the driver-synced k-means jobs; persisted
+    // under the sort as q_linkage's exchange barrier
     "q_semantic_dedup" -> ((s, dir) =>
-      sortBarrier(Similarity.semanticDedup(Tables.load(s, dir, "embeddings"),
-          k = 16, iters = 1, threshold = 0.4), "vec_id")
+      CacheRegistry.persist(Similarity.semanticDedup(
+          Tables.load(s, dir, "embeddings"), k = 16, iters = 1, threshold = 0.4))
         .orderBy("vec_id")),
 
     // centroid-distance outliers: vectors whose rounded cosine to their

@@ -19,76 +19,59 @@ private[graft] object QueryShared {
   def dsum(c: Column): Column =
     sum(c.cast("decimal(18,4)")).cast("double")
 
-  /** Shared CC substrate for the dedup trio (q_dedup_clusters,
-    * q_cluster_sizes, q_dedup_best): the (doc_id, canonical_id) labeling
-    * over the 0.8-Jaccard near-dup graph, computed ONCE per (session,
-    * sfDir) and pinned behind a lineage cut, so a suite process pays the
-    * pair-generation + connected-components cost once instead of three
-    * times. The cut (checkpoint-backed, not cache-backed) survives the
-    * harnesses' between-query `CacheRegistry.release` + `clearCache`;
-    * each query stays independently runnable — the first caller
-    * computes. The memo is labels-sized (one row per doc) and lives for
-    * the process, the same lifetime the suite needs.
-    */
-  val dedupLabelsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  def dedupLabels(s: SparkSession, dir: String): DataFrame =
-    dedupLabelsMemo.computeIfAbsent((s, dir), { _ =>
-      val docs = Tables.load(s, dir, "documents")
-      operators.Lineage.cut(
-        Dedup.dedupClusters(docs, Dedup.ngramJaccardPairs(docs, threshold = 0.8)))
-    })
-
-  /** The same shared-substrate contract for the graph-analytics family
-    * (q_pagerank/_w, q_ppr, q_triangles, q_triangle_stats,
-    * q_triangle_delta, q_kcore): all seven analyze the SAME
-    * span-duplication graph, whose derivation (chunk + md5 + self-join
-    * over the corpus) dominates each query's cost — compute the
-    * weighted edge table once per (session, sfDir) behind a lineage
-    * cut; unweighted consumers project (src, dst), which is exactly
-    * [[Graph.spanLinkEdges]]' definition.
-    */
-  val spanEdgesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  def spanEdges(s: SparkSession, dir: String): DataFrame =
-    spanEdgesMemo.computeIfAbsent((s, dir), { _ =>
-      operators.Lineage.cut(
-        Graph.spanLinkEdgesWeighted(Tables.load(s, dir, "documents")))
-    })
-
-  /** Shared trained codebook for the k-means family (q_kmeans,
-    * q_cluster_purity, q_embed_outliers — all train at k=8, iters=2 on
-    * the same embeddings): training is the family's dominant cost and a
-    * pure function of (corpus, k, iters), so one table serves all
-    * three. No lineage cut needed — [[Similarity.trainCodebook]]
-    * returns a LocalRelation of driver-built rows (k×dim floats), which
-    * cannot be evicted or recomputed.
-    */
-  val codebookMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  def trainedCodebook8(s: SparkSession, dir: String): DataFrame =
-    codebookMemo.computeIfAbsent((s, dir), { _ =>
-      Similarity.trainCodebook(Tables.load(s, dir, "embeddings"), k = 8, iters = 2)
-    })
-
-  /** A memoized cross-query artifact, the suite queries that read it,
-    * and how to build it for a (session, sfDir).
+  /** A cross-query artifact, the suite queries that read it, and how to
+    * build it for a (session, sfDir). `apply` returns the one
+    * [[CacheRegistry.pinned]] instance per (session, sfDir): the first
+    * caller builds it, so each query stays independently runnable, and
+    * the harnesses' between-query `CacheRegistry.release` + `clearCache`
+    * never evict it — `build` returns a frame they cannot reach (a
+    * [[CacheRegistry.cut]] result or a LocalRelation). It lives for the
+    * process, the same lifetime the suite needs.
     */
   final case class Substrate(name: String, users: Set[String],
-      build: (SparkSession, String) => DataFrame)
+      build: (SparkSession, String) => DataFrame) {
+    def apply(s: SparkSession, dir: String): DataFrame =
+      CacheRegistry.pinned(s, dir, name)(build(s, dir))
+  }
 
-  /** The memos above with their readers, declared once: the bench fills,
-    * untimed, only the substrates its selected queries read.
+  /** The dedup family's (doc_id, canonical_id) labeling over the
+    * 0.8-Jaccard near-dup graph, behind a cut: a suite process pays the
+    * pair-generation + connected-components cost once instead of once
+    * per reader. Labels-sized (one row per doc).
     */
-  val substrates: Seq[Substrate] = Seq(
-    Substrate("dedup_labels", Set("q_dedup_clusters", "q_split_leakage",
-      "q_cluster_split", "q_dup_rate_by_source", "q_datasheet",
-      "q_cluster_sizes", "q_dedup_best"), dedupLabels),
-    Substrate("span_edges", Set("q_sssp", "q_pagerank", "q_pagerank_w",
-      "q_ppr", "q_hyperanf", "q_triangles", "q_triangle_stats",
-      "q_triangle_delta", "q_kcore", "q_lpa", "q_bfs"), spanEdges),
-    Substrate("codebook", Set("q_kmeans", "q_cluster_purity",
-      "q_embed_outliers"), trainedCodebook8))
+  val dedupLabels = Substrate("dedup_labels", Set("q_dedup_clusters",
+      "q_split_leakage", "q_cluster_split", "q_dup_rate_by_source",
+      "q_datasheet", "q_cluster_sizes", "q_dedup_best"), { (s, dir) =>
+    val docs = Tables.load(s, dir, "documents")
+    CacheRegistry.cut(
+      Dedup.dedupClusters(docs, Dedup.ngramJaccardPairs(docs, threshold = 0.8)))
+  })
+
+  /** The graph-analytics family's weighted span-duplication edge table,
+    * behind a cut: its derivation (chunk + md5 + self-join over the
+    * corpus) dominates each reader's cost. Unweighted readers project
+    * (src, dst), which is exactly [[Graph.spanLinkEdges]]' definition.
+    */
+  val spanEdges = Substrate("span_edges", Set("q_sssp", "q_pagerank",
+      "q_pagerank_w", "q_ppr", "q_hyperanf", "q_triangles",
+      "q_triangle_stats", "q_triangle_delta", "q_kcore", "q_lpa", "q_bfs"),
+    (s, dir) => CacheRegistry.cut(
+      Graph.spanLinkEdgesWeighted(Tables.load(s, dir, "documents"))))
+
+  /** The k-means family's codebook (all readers train at k=8, iters=2 on
+    * the same embeddings): training is the family's dominant cost and a
+    * pure function of (corpus, k, iters). No cut needed —
+    * [[Similarity.trainCodebook]] returns a LocalRelation of driver-built
+    * rows (k×dim floats), which cannot be evicted or recomputed.
+    */
+  val trainedCodebook8 = Substrate("codebook", Set("q_kmeans",
+      "q_cluster_purity", "q_embed_outliers"), (s, dir) =>
+    Similarity.trainCodebook(Tables.load(s, dir, "embeddings"), k = 8, iters = 2))
+
+  /** Every substrate, declared once: the bench fills, untimed, only the
+    * ones its selected queries read.
+    */
+  val substrates: Seq[Substrate] = Seq(dedupLabels, spanEdges, trainedCodebook8)
 
   /** The substrates a run over `only` (None: every query) reads. */
   def substratesFor(only: Option[Set[String]]): Seq[Substrate] =
@@ -157,31 +140,6 @@ private[graft] object QueryShared {
   /** Exact-decimal sum of a computed double expression at 6 dp. */
   def dsum6(c: Column): Column =
     sum(c.cast("decimal(18,6)")).cast("double")
-
-  /** Exchange barrier under a final global sort (guide §1.1 empirical
-    * loop + §7.2 plan reading; r20 profile evidence): `orderBy` plans a
-    * range exchange whose partitioner SAMPLES its child RDD before the
-    * real pass, so everything pipelined into that exchange — for a
-    * map-heavy tail with no exchange of its own (broadcast-join pair
-    * scoring, within-cluster similarity joins) that is the whole
-    * expensive chain — executes twice per action. Stage-profiled on
-    * q_fuzzy_pairs/q_semantic_dedup: two same-shape stages of equal CPU,
-    * one with the range exchange's shuffle write and one without (the
-    * sampler). A `repartition` barrier does NOT survive — the optimizer
-    * elides a user shuffle directly under a global sort (verified:
-    * the plan kept exactly one Exchange) — so the barrier is a tracked
-    * persist of the ANSWER-SIZED result: the sampler's pass fills the
-    * cache partition by partition and the sort's real pass reads it
-    * back, so the expensive tail computes once per action. Row set and
-    * final order are unchanged — the orderBy above still imposes the
-    * total order. Scale-safe: what persists is threshold-kept pairs
-    * (answer-sized), never the corpus, at MEMORY_AND_DISK (spillable);
-    * CacheRegistry releases it after the query like every operator
-    * intermediate.
-    */
-  def sortBarrier(df: DataFrame, key: String = ""): DataFrame =
-    CacheRegistry.track(df.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Run `body` against a fresh temp directory, eagerly materialize its
     * result (executor-side, spillable), then recursively delete the

@@ -872,7 +872,7 @@ object Streaming {
         if (!replayed) {
           val b = batch.toDF().localCheckpoint(true)
           try body(b, !storeExists())
-          finally graft.operators.Lineage.release(b)
+          finally graft.operators.CacheRegistry.free(b)
           commitPath.foreach(p =>
             IngestCommitLog.commit(p.getFileSystem(hconf), p, batchId))
           afterBatch(fs)
@@ -1364,7 +1364,7 @@ object Streaming {
                 coldBuild(b)
                 Seq.empty[Long] // cold build writes 1 file per window
               } else appendBatch(b)
-            } finally graft.operators.Lineage.release(b)
+            } finally graft.operators.CacheRegistry.free(b)
           commitPath.foreach(p =>
             IngestCommitLog.commit(p.getFileSystem(hconf), p, batchId))
           val files = maxFilesInWindows(fs, storeDir, touched)

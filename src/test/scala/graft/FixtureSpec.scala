@@ -47,7 +47,7 @@ class FixtureSpec extends AnyFunSuite {
 
   test("fast byte-scanner path ≡ Catalyst expression path, even across tiny splits") {
     // 4 KB splits force the prefix scan to stitch many boundaries
-    val fast = LogParser.parseFast(spark, logPath, splitMaxBytes = 4096)
+    val fast = LogParser.parse(spark, logPath, splitMaxBytes = 4096)
       .orderBy("line_no").collect()
     val exprP = ParseOracle.parseExpr(spark, logPath, splitMaxBytes = 4096)
       .orderBy("line_no").collect()

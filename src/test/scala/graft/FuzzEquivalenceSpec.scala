@@ -56,7 +56,7 @@ class FuzzEquivalenceSpec extends AnyFunSuite {
       lines.mkString("\n").getBytes("UTF-8"))
     val path = tmp.resolve("fuzz.log").toString
     for (split <- Seq(512L, 8192L, LogParser.DefaultSplitMaxBytes)) {
-      val fast = LogParser.parseFast(spark, path, split).orderBy("line_no").collect()
+      val fast = LogParser.parse(spark, path, split).orderBy("line_no").collect()
       val exprP = ParseOracle.parseExpr(spark, path, split).orderBy("line_no").collect()
       assert(fast.length == exprP.length, s"split=$split row count")
       fast.zip(exprP).zipWithIndex.foreach { case ((a, b), i) =>

@@ -2031,9 +2031,9 @@ class OperatorsSpec extends AnyFunSuite {
     CacheRegistry.release(spark)
   }
 
-  test("Lineage.release frees a localCheckpoint cut's storage blocks") {
+  test("CacheRegistry.free frees a localCheckpoint cut's storage blocks") {
     // the test session has a reliable checkpoint dir (TestSpark), so
-    // Lineage.cut would take the reliable path here; build the
+    // CacheRegistry.cut would take the reliable path here; build the
     // localCheckpoint-backed shape (what cut returns when no dir is
     // set — plain library sessions) directly
     val before = spark.sparkContext.getPersistentRDDs.keySet
@@ -2042,15 +2042,15 @@ class OperatorsSpec extends AnyFunSuite {
     assert(cutDf.count() == 100)
     val fresh = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(fresh.nonEmpty, "cut should persist a checkpointed RDD")
-    graft.operators.Lineage.release(cutDf)
+    CacheRegistry.free(cutDf)
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert(fresh.forall(id => !after.contains(id)),
       s"release should drop the checkpoint blocks; still cached: ${fresh & after}")
     // a derived (non-cut) frame is a safe no-op: top-level match only
-    graft.operators.Lineage.release(spark.range(5).toDF("n"))
+    CacheRegistry.free(spark.range(5).toDF("n"))
   }
 
-  test("Lineage.release(deleteFiles) deletes a dead reliable cut's checkpoint files") {
+  test("CacheRegistry.free(deleteFiles) deletes a dead reliable cut's checkpoint files") {
     // the reliable path stores a cut as FILES under the checkpoint dir;
     // rdd.unpersist frees nothing there (advisor r10) — deleteFiles must
     // remove the directory itself
@@ -2065,7 +2065,7 @@ class OperatorsSpec extends AnyFunSuite {
     val p = new org.apache.hadoop.fs.Path(dir.get)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(p))
-    graft.operators.Lineage.release(cp, deleteFiles = true)
+    CacheRegistry.free(cp, deleteFiles = true)
     assert(!fs.exists(p), "release(deleteFiles) should remove the dead cut's files")
   }
 

@@ -2170,11 +2170,9 @@ class OperatorsSpec2 extends AnyFunSuite {
     val batch = d.filter(col("doc_id") % 3 === 0)
     val plain = SpanStore.probe(spark, batch, dir)
       .collect().map(_.toSeq).toSet
-    val pr = CacheRegistry.track(SpanStore.printsOf(spark, batch, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val maybe = CacheRegistry.track(SpanStore.bloomMaybe(spark,
-        pr.select("shard", "span_md5").distinct(), dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val pr = CacheRegistry.persist(SpanStore.printsOf(spark, batch, dir))
+    val maybe = CacheRegistry.persist(SpanStore.bloomMaybe(spark,
+        pr.select("shard", "span_md5").distinct(), dir))
     val reused = SpanStore.probe(spark, batch, dir,
         printsPre = Some(pr), bloomCandidatesPre = Some(maybe))
       .collect().map(_.toSeq).toSet
