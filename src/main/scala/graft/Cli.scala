@@ -1617,9 +1617,9 @@ object Cli {
 
       case "by-group" =>
         val pattern = flags.getOrElse("group", "")
-        val limit = flags.get("limit").map(_.toInt)
+        val limit = flags.get("limit").map(_.toLong)
         val matchedDf = Queries.byGroup(entries, pattern)
-        val shown = limit.map(matchedDf.limit).getOrElse(matchedDf).collect()
+        val shown = limit.fold(matchedDf)(Queries.limitRows(matchedDf, _)).collect()
         val matched = shown.length
         if (json) {
           val total = if (stats) totalRows else 0L

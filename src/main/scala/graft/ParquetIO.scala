@@ -1,15 +1,25 @@
 package graft
 
+import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ColumnPath, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Shims
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Parquet sink/source for entry tables.
   *
@@ -202,6 +212,123 @@ object ParquetIO {
   private def readFooter(conf: Configuration, st: FileStatus): ParquetMetadata = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
     try reader.getFooter finally reader.close()
+  }
+
+  /** The Parquet relation `df` reads as it is: its analyzed plan is only
+    * `Project` nodes over one Parquet `LogicalRelation`. Any other node (a
+    * filter, limit, sample, join or aggregate) or an RDD-backed frame gives
+    * None.
+    */
+  @tailrec private def parquetRelation(plan: LogicalPlan): Option[HadoopFsRelation] = plan match {
+    case Project(_, child) => parquetRelation(child)
+    case r: LogicalRelation => r.relation match {
+      case h: HadoopFsRelation if h.fileFormat.isInstanceOf[ParquetFileFormat] => Some(h)
+      case _ => None
+    }
+    case _ => None
+  }
+
+  /** The relation column that output `a` of `plan` is, passed through every
+    * `Project` as an attribute or a widening `Cast` of one.
+    */
+  private def relationColumn(plan: LogicalPlan, a: Attribute): Option[Attribute] = {
+    @tailrec def passed(e: Expression): Option[Attribute] = e match {
+      case x: Attribute => Some(x)
+      case Alias(c, _) => passed(c)
+      case c: Cast if Cast.canUpCast(c.child.dataType, c.dataType) => passed(c.child)
+      case _ => None
+    }
+    plan match {
+      case Project(list, child) =>
+        list.find(_.exprId == a.exprId).flatMap(passed).flatMap(relationColumn(child, _))
+      case r: LogicalRelation => r.output.find(_.exprId == a.exprId)
+      case _ => None
+    }
+  }
+
+  /** The data files of `relation`, from its `FileIndex`'s listing (no I/O). */
+  private def relationFiles(relation: HadoopFsRelation): Seq[FileStatus] =
+    relation.location.listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus))
+
+  /** Whether Spark scans `df` as one partition: `df` reads a Parquet table
+    * as it is, and the table is one data file of at most
+    * `min(spark.sql.files.maxPartitionBytes, spark.sql.files.openCostInBytes)`
+    * bytes, a size that no split size Spark derives can cut.
+    */
+  private[graft] def isOneSplit(df: DataFrame): Boolean =
+    parquetRelation(df.queryExecution.analyzed).exists { h =>
+      val conf = Shims.sqlConf(df.sparkSession)
+      relationFiles(h) match {
+        case Seq(f) => f.getLen <= math.min(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
+        case _ => false
+      }
+    }
+
+  /** `max(line_no) + 1` for each `file` value of `df`, as
+    * `groupBy(file).agg(max(line_no) + 1)` gives it, read from the row-group
+    * statistics in the footers of the files `df` scans; no Spark job.
+    *
+    * Applies when `df` reads a Parquet table as it is (see
+    * [[parquetRelation]]), with `file` a string column and `line_no` an
+    * INT32 or INT64 one of its files, and every row group holds one `file`
+    * value (min == max, no nulls) or only nulls, with a `line_no` max.
+    * Otherwise (a column or its statistics absent, a row group mixing
+    * `file` values), or when a footer cannot be read, None: the caller
+    * aggregates.
+    */
+  private[graft] def footerLineCounts(df: DataFrame): Option[Seq[(Option[String], Long)]] = {
+    val plan = df.queryExecution.analyzed
+    def column(name: String, types: DataType*): Option[String] =
+      plan.output.find(_.name == name).flatMap(relationColumn(plan, _))
+        .filter(c => types.contains(c.dataType)).map(_.name)
+    for {
+      h <- parquetRelation(plan)
+      file <- column(Schema.File, StringType)
+      lineNo <- column(Schema.LineNo, IntegerType, LongType)
+      counts <- {
+        val conf = df.sparkSession.sparkContext.hadoopConfiguration
+        try statsLineCounts(relationFiles(h).map(readFooter(conf, _)), file, lineNo)
+        catch { case e if NonFatal(e) => None }
+      }
+    } yield counts
+  }
+
+  private def statsLineCounts(
+      footers: Seq[ParquetMetadata], file: String, lineNo: String): Option[Seq[(Option[String], Long)]] = {
+    def chunk(b: BlockMetaData, name: String) =
+      b.getColumns.asScala.find(_.getPath == ColumnPath.get(name))
+    // Some(None) for an all-null chunk, Some(Some(v)) for one holding only v
+    def fileValue(b: BlockMetaData): Option[Option[String]] = chunk(b, file).flatMap { c =>
+      val s = c.getStatistics
+      if (c.getPrimitiveType.getPrimitiveTypeName != PrimitiveTypeName.BINARY ||
+          s == null || !s.isNumNullsSet) None
+      else if (!s.hasNonNullValue && s.getNumNulls == b.getRowCount) Some(None)
+      else if (s.hasNonNullValue && s.getNumNulls == 0 &&
+          java.util.Arrays.equals(s.getMinBytes, s.getMaxBytes))
+        Some(Some(UTF8String.fromBytes(s.getMaxBytes).toString))
+      else None
+    }
+    def maxLineNo(b: BlockMetaData): Option[Long] = chunk(b, lineNo).flatMap { c =>
+      val t = c.getPrimitiveType
+      val signed = t.getLogicalTypeAnnotation match {
+        case null => true
+        case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
+        case _ => false
+      }
+      val s = c.getStatistics
+      if (!signed || s == null || !s.hasNonNullValue) None
+      else t.getPrimitiveTypeName match {
+        // a max of Long.MaxValue is left to the aggregate, whose + 1
+        // overflows as the session's ANSI setting says
+        case PrimitiveTypeName.INT32 | PrimitiveTypeName.INT64 =>
+          Some(s.genericGetMax.asInstanceOf[Number].longValue).filter(_ < Long.MaxValue)
+        case _ => None
+      }
+    }
+    val groups = footers.flatMap(_.getBlocks.asScala).filter(_.getRowCount > 0)
+      .map(b => fileValue(b).zip(maxLineNo(b)))
+    if (groups.contains(None)) None
+    else Some(groups.flatten.groupMapReduce(_._1)(_._2)(math.max).toSeq.map { case (v, m) => (v, m + 1) })
   }
 
   /** Bucketed parquet table write — the storage-side half of co-located

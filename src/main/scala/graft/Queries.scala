@@ -18,6 +18,15 @@ object Queries {
   def normalizedGroup(c: Column): Column =
     when(c.isNull || c === "", NoGroup).otherwise(c)
 
+  /** `entries` in one partition when Spark scans it as one anyway
+    * ([[ParquetIO.isOneSplit]]): `SinglePartition` satisfies an aggregate's
+    * required distribution, so the aggregate plans no Exchange and runs as
+    * one job instead of a shuffle-map job plus a result job. Any other frame
+    * keeps its parallel plan.
+    */
+  private def oneTask(entries: DataFrame): DataFrame =
+    if (ParquetIO.isOneSplit(entries)) entries.coalesce(1) else entries
+
   /** A1: list-groups — per-group entry/command/progress counts and
     * first/last-seen timestamps, ordered by first seen
     * (reference query_cli.go:55-119).
@@ -25,9 +34,12 @@ object Queries {
     * Divergence (SURVEY.md §2.4): the reference folds the epoch-zero
     * sentinel of timestamp-less lines into min(); our null timestamps are
     * naturally ignored by min/max.
+    *
+    * One Spark job on a one-split table ([[oneTask]]); on any other frame
+    * the aggregate's shuffle-map stage is a job of its own.
     */
   def listGroups(entries: DataFrame): DataFrame =
-    entries
+    oneTask(entries)
       .groupBy(normalizedGroup(col(Schema.Group)).as("name"))
       .agg(
         count(lit(1)).as("entry_count"),
@@ -60,9 +72,12 @@ object Queries {
     * >= `start`, sorted in that order; empty when `start` is out of range.
     *
     * Assumes `line_no` is dense 0..c-1 per file, as [[LogParser.parse]]
-    * and [[Cli.entriesWithLineNo]] make it, so one aggregate of
-    * max(line_no)+1 per file (one row per file, collected once) gives
-    * every file's row count. A prefix sum on the driver finds the file
+    * and [[Cli.entriesWithLineNo]] make it, so max(line_no)+1 per file
+    * gives every file's row count. On a Parquet table read as it is, those
+    * counts come from the row-group statistics in its footers
+    * ([[ParquetIO.footerLineCounts]]), with no Spark job; on any other
+    * frame, or when the statistics do not settle them, from
+    * [[aggregateLineCounts]]. A prefix sum on the driver finds the file
     * `f0` holding row `start` and the first wanted `line_no` within it;
     * the rest is two sargable terms the Parquet scan can prune with,
     * whatever the file count.
@@ -70,9 +85,7 @@ object Queries {
   private def fromGlobalRow(entries: DataFrame, start: Long): DataFrame = {
     if (start < 0) return entries.limit(0)
     // Spark's string order (UTF-8 bytes, nulls first), not Java's UTF-16 one
-    val counts = entries.groupBy(col(Schema.File))
-      .agg((max(col(Schema.LineNo)) + 1).as("n")).collect()
-      .map(r => (Option(r.getString(0)), r.getLong(1)))
+    val counts = ParquetIO.footerLineCounts(entries).getOrElse(aggregateLineCounts(entries))
       .sortBy(_._1.map(UTF8String.fromString))
     val ends = counts.map(_._2).scanLeft(0L)(_ + _).tail
     val i = ends.indexWhere(_ > start)
@@ -85,6 +98,14 @@ object Queries {
       .orderBy(Schema.File, Schema.LineNo)
   }
 
+  /** max(line_no)+1 per `file` value: one aggregate, collected (one row
+    * per file).
+    */
+  private[graft] def aggregateLineCounts(entries: DataFrame): Seq[(Option[String], Long)] =
+    entries.groupBy(col(Schema.File))
+      .agg((max(col(Schema.LineNo)) + 1).as("n")).collect().toSeq
+      .map(r => (Option(r.getString(0)), r.getLong(1)))
+
   /** Above this many rows a limit counts its frame first: Spark's top-n
     * (`orderBy … limit n`) sizes a buffer of 2n rows per partition up
     * front, so a huge `n` on a small table would allocate gigabytes to
@@ -96,7 +117,7 @@ object Queries {
     * set when `n` is 2^31 or more (no frame that large can be collected)
     * or, past [[TopNMax]], when the frame has no more than `n` rows.
     */
-  private def limitRows(df: DataFrame, n: Long): DataFrame =
+  private[graft] def limitRows(df: DataFrame, n: Long): DataFrame =
     if (n >= Int.MaxValue || (n > TopNMax && n >= df.count())) df
     else df.limit(math.max(n, 0L).toInt)
 
@@ -111,8 +132,10 @@ object Queries {
       .orderBy(Schema.File, Schema.LineNo)
 
   /** O4/S9: seek — stream from global row `k`, optional limit
-    * (reference query_cli.go:352-373): one per-file count aggregate, then
-    * a two-term predicate; with a limit the sort is one top-n job.
+    * (reference query_cli.go:352-373): per-file row counts (from the
+    * footers on a Parquet table read as it is, else one aggregate), then a
+    * two-term predicate; with a limit the sort is one top-n job, so a
+    * limited seek on such a table runs one Spark job.
     * Assumes `line_no` is dense per file, as parsed or read. Out-of-range
     * `k` (negative, or at or past the end) yields an empty frame (the
     * reference errors, query.go:429-433; flagging over aborting is the
@@ -123,9 +146,11 @@ object Queries {
     limit.fold(df)(limitRows(df, _))
   }
 
-  /** A2: whole-file processing summary (reference cmd/bklog/main.go:32-40). */
+  /** A2: whole-file processing summary (reference cmd/bklog/main.go:32-40);
+    * one Spark job on a one-split table ([[oneTask]]).
+    */
   def summary(entries: DataFrame): DataFrame =
-    entries.agg(
+    oneTask(entries).agg(
       count(lit(1)).as("total_entries"),
       sum(col(Schema.HasTimestamp).cast("long")).as("entries_with_time"),
       sum(col(Schema.IsCommand).cast("long")).as("commands"),

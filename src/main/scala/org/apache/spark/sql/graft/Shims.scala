@@ -44,8 +44,13 @@ object Shims {
   def parquetFooterSchema(
       spark: SparkSession,
       footer: org.apache.parquet.hadoop.Footer): org.apache.spark.sql.types.StructType =
-    ParquetFileFormat.readSchemaFromFooter(footer, new ParquetToSparkSchemaConverter(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf))
+    ParquetFileFormat.readSchemaFromFooter(footer, new ParquetToSparkSchemaConverter(sqlConf(spark)))
+
+  /** The session's SQL settings, typed (`sessionState` is not on the API
+    * session).
+    */
+  def sqlConf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
 
   /** The file an input split of a `newAPIHadoopFile` RDD reads, known on the
     * driver (`NewHadoopPartition` is `private[spark]`).

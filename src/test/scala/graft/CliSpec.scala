@@ -75,6 +75,28 @@ class CliSpec extends AnyFunSuite {
     assert(out.contains("[GRP]") || out.contains("[CMD]"))
   }
 
+  test("query by-group -limit takes a Long: 2^31 and more set no limit, a negative one shows no rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cli-limit")
+    val log = dir.resolve("job.log")
+    java.nio.file.Files.write(log, (0 until 12).map {
+      case i if i % 5 == 0 => s"~~~ Section $i\n"
+      case i => s"line $i\n"
+    }.mkString.getBytes("UTF-8"))
+    val table = dir.resolve("entries").toString
+    ParquetIO.write(LogParser.parse(spark, log.toString), table)
+    def byGroup(limit: String): String = captureOut {
+      Cli.runQuery(spark, Map("file" -> table, "op" -> "by-group", "group" -> "section",
+        "limit" -> limit))
+    }
+    val huge = byGroup("3000000000")
+    assert(huge.startsWith("Entries in group matching 'section': 12\n"), huge)
+    assert(huge.contains("line 11"), huge)
+    assert(byGroup("2").startsWith("Entries in group matching 'section': 2 (limited to 2)\n"))
+    val negative = byGroup("-1")
+    assert(negative.startsWith("Entries in group matching 'section': 0"), negative)
+    assert(negative.contains("No entries found for the specified group."), negative)
+  }
+
   test("query tail and seek on a foreign parquet (no line_no column)") {
     val tail = captureOut {
       Cli.runQuery(spark, Map(

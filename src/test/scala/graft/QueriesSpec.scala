@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Query-operation semantics against the parsed bash-example fixture
@@ -232,20 +233,96 @@ class QueriesSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((0L, 0L), (1L, 1L), (2L, 2L)))
   }
 
-  test("job counts: tail 1, seek with a limit <= 3, listGroups <= 2, ParquetIO.read 0") {
-    val dir = Files.createTempDirectory("graft-jobs").toString + "/e"
-    ParquetIO.write(entriesOf("a" -> 40, "b" -> 30), dir)
-    val (e, readJobs) = jobsOf(ParquetIO.read(spark, dir))
+  test("job counts: ParquetIO.read 0, then summary, listGroups, tail and a limited seek 1 each on a one-file table") {
+    val base = Files.createTempDirectory("graft-jobs").toString
+    // one file of one log: every row group holds one `file` value
+    ParquetIO.write(entriesOf("a" -> 70).coalesce(1), s"$base/one")
+    val (e, readJobs) = jobsOf(ParquetIO.read(spark, s"$base/one"))
     assert(readJobs == 0, s"ParquetIO.read ran $readJobs jobs")
+    val (sum, summaryJobs) = jobsOf(Queries.summary(e).head())
+    assert(sum.getAs[Long]("total_entries") == 70L && sum.getAs[Long]("commands") == 24L)
+    assert(summaryJobs == 1, s"summary ran $summaryJobs jobs")
+    val (g, groupJobs) = jobsOf(Queries.listGroups(e).collect())
+    assert(g.length == 18 && g.map(_.getAs[Long]("entry_count")).sum == 70L)
+    assert(groupJobs == 1, s"listGroups ran $groupJobs jobs")
     val (t, tailJobs) = jobsOf(contents(Queries.tail(e, 5)))
-    assert(t == (25 until 30).map(i => s"b-l$i"))
+    assert(t == (65 until 70).map(i => s"a-l$i"))
     assert(tailJobs == 1, s"tail ran $tailJobs jobs")
     val (s, seekJobs) = jobsOf(contents(Queries.seek(e, 38, Some(4))))
-    assert(s == Seq("a-l38", "a-l39", "b-l0", "b-l1"))
-    assert(seekJobs <= 3, s"seek ran $seekJobs jobs")
-    val (g, groupJobs) = jobsOf(Queries.listGroups(e).collect())
-    assert(g.length == 10 && g.map(_.getAs[Long]("entry_count")).sum == 70L)
-    assert(groupJobs <= 2, s"listGroups ran $groupJobs jobs")
+    assert(s == (38 until 42).map(i => s"a-l$i"))
+    assert(seekJobs == 1, s"seek ran $seekJobs jobs")
+
+    // two logs parsed into two files: the footers still give seek its counts
+    val logs = Files.createTempDirectory("graft-jobs-logs")
+    for (f <- Seq("a", "b"))
+      Files.write(logs.resolve(s"$f.log"), (0 until 10).map(i => s"$f$i\n").mkString.getBytes)
+    ParquetIO.write(LogParser.parse(spark, logs.toString + "/*.log"), s"$base/two")
+    assert(new java.io.File(s"$base/two").list().count(_.endsWith(".parquet")) == 2)
+    val two = ParquetIO.read(spark, s"$base/two")
+    val (s2, seek2Jobs) = jobsOf(contents(Queries.seek(two, 15, Some(3))))
+    assert(s2 == Seq("b5", "b6", "b7"), s"got $s2")
+    assert(seek2Jobs == 1, s"seek on two files ran $seek2Jobs jobs")
+    val (t2, tail2Jobs) = jobsOf(contents(Queries.tail(two, 3)))
+    assert(t2 == Seq("b7", "b8", "b9") && tail2Jobs == 1, s"tail on two files: $t2, $tail2Jobs jobs")
+    val (g2, group2Jobs) = jobsOf(Queries.listGroups(two).collect())
+    assert(g2.map(_.getAs[Long]("entry_count")).sum == 20L)
+    assert(group2Jobs <= 2, s"listGroups on two files ran $group2Jobs jobs")
+
+    // one row group mixing two `file` values: seek falls back to the
+    // aggregate and returns the same rows
+    ParquetIO.write(entriesOf("a" -> 40, "b" -> 30).coalesce(1), s"$base/mixed")
+    val mixed = ParquetIO.read(spark, s"$base/mixed")
+    assert(ParquetIO.footerLineCounts(mixed).isEmpty)
+    val (s3, seek3Jobs) = jobsOf(contents(Queries.seek(mixed, 38, Some(4))))
+    assert(s3 == Seq("a-l38", "a-l39", "b-l0", "b-l1"))
+    assert(seek3Jobs <= 3, s"seek on a mixed row group ran $seek3Jobs jobs")
+  }
+
+  test("seek: footer counts equal the aggregate's at row 0, a file boundary, the end, past it and -1") {
+    val base = Files.createTempDirectory("graft-footer-counts").toString
+    // one file per `file` value, appended to one table
+    def table(name: String, parts: DataFrame*): String = {
+      val dir = s"$base/$name"
+      parts.zipWithIndex.foreach { case (p, i) =>
+        ParquetIO.write(p.coalesce(1), dir, if (i == 0) "overwrite" else "append")
+      }
+      dir
+    }
+    val one = ParquetIO.read(spark, table("one", entriesOf("a" -> 7)))
+    val many = ParquetIO.read(spark,
+      table("many", entriesOf("b" -> 4), entriesOf("a" -> 3), entriesOf("c" -> 5)))
+    val nulls = ParquetIO.read(spark, table("nulls", entriesOf("a" -> 3),
+      entriesOf("n" -> 2).withColumn(Schema.File, lit(null).cast("string"))))
+    val legacyDir = s"$base/legacy"
+    entriesOf("a" -> 6).withColumn(Schema.LineNo, col(Schema.LineNo).cast("int"))
+      .coalesce(1).write.parquet(legacyDir)
+    entriesOf("b" -> 2).withColumn(Schema.LineNo, col(Schema.LineNo).cast("int"))
+      .coalesce(1).write.mode("append").parquet(legacyDir)
+    val legacy = ParquetIO.read(spark, legacyDir)
+    val mixed = ParquetIO.read(spark, table("mixed", entriesOf("a" -> 3, "b" -> 4)))
+    val footerFrames = Seq("one" -> one, "many" -> many, "nulls" -> nulls, "legacy" -> legacy)
+    val otherFrames = Seq(
+      "filter(is_command)" -> many.filter(col(Schema.IsCommand)),
+      "line_no + 1" -> many.withColumn(Schema.LineNo, col(Schema.LineNo) + 1),
+      "entriesWithLineNo" -> Cli.entriesWithLineNo(many.drop(Schema.File, Schema.LineNo)),
+      "mixed row group" -> mixed)
+    // a Filter the optimizer drops keeps the frame on the aggregate path
+    def viaAggregate(df: DataFrame) = df.filter(lit(true))
+    for ((name, df) <- footerFrames ++ otherFrames) {
+      val footer = ParquetIO.footerLineCounts(df)
+      assert(footer.isDefined == footerFrames.exists(_._1 == name), s"$name: $footer")
+      assert(ParquetIO.footerLineCounts(viaAggregate(df)).isEmpty, name)
+      val counts = Queries.aggregateLineCounts(df).sortBy(_._1.getOrElse(""))
+      footer.foreach(c => assert(c.sortBy(_._1.getOrElse("")) == counts, name))
+      val total = counts.map(_._2).sum
+      val boundary = counts.sortBy(_._1.map(UTF8String.fromString)).head._2
+      for (k <- Seq(0L, boundary, total - 1, total, total + 1, -1L)) {
+        assert(contents(Queries.seek(df, k)) == contents(Queries.seek(viaAggregate(df), k)),
+          s"$name seek $k")
+      }
+    }
+    assert(contents(Queries.seek(nulls, 1)) == Seq("n-l1", "a-l0", "a-l1", "a-l2"))
+    assert(contents(Queries.seek(legacy, 5, Some(2))) == Seq("a-l5", "b-l0"))
   }
 
   test("seek streams from row k with optional limit") {
