@@ -1628,8 +1628,7 @@ object Cli {
               "matched_entries" -> (if (stats) matched else 0).toString,
               "query_time_ms" -> (if (stats) queryMs else 0.0).toString)))
         } else {
-          val limitText = limit.filter(matched >= _).map(n => s" (limited to $n)").getOrElse("")
-          println(s"Entries in group matching '$pattern': $matched$limitText\n")
+          println(s"Entries in group matching '$pattern': $matched${limitNote(limit, matched)}\n")
           if (shown.isEmpty) println("No entries found for the specified group.")
           else shown.foreach(r => println(formatEntryWithMarkers(r)))
           if (stats) {
@@ -1670,8 +1669,7 @@ object Cli {
               "entries_shown" -> (if (stats) rows.length else 0).toString,
               "query_time_ms" -> (if (stats) queryMs else 0.0).toString)))
         } else {
-          val limitText = limit.filter(rows.length >= _).map(n => s" (limited to $n)").getOrElse("")
-          println(s"Entries starting from row $k: ${rows.length}$limitText\n")
+          println(s"Entries starting from row $k: ${rows.length}${limitNote(limit, rows.length)}\n")
           rows.foreach(r => println(formatEntryWithMarkers(r)))
           if (stats) {
             println("\n--- Seek Statistics ---")
@@ -1685,6 +1683,12 @@ object Cli {
         System.err.println(s"Unknown operation: $other"); sys.exit(1)
     }
   }
+
+  /** ` (limited to n)` when a `-limit n` with `n >= 0` capped the `shown`
+    * rows; a negative limit shows no rows rather than limiting them.
+    */
+  private def limitNote(limit: Option[Long], shown: Int): String =
+    limit.filter(n => n >= 0 && shown >= n).fold("")(n => s" (limited to $n)")
 
   /** Entry files written by this engine carry `line_no`; files from the
     * reference (or any foreign writer) do not — synthesize it from the

@@ -56,7 +56,8 @@ object LineScanner {
   }
 
   /** Parse one line's bytes [0, len). A single trailing `\r` has already
-    * been removed by the caller (ScanLines semantics).
+    * been removed by the caller (ScanLines semantics). The line's content is
+    * copied out, so `bytes` may be reused once this returns.
     */
   def parse(bytes: Array[Byte], len: Int): Line = {
     var ts: java.lang.Long = null
@@ -98,9 +99,8 @@ object LineScanner {
         }
       }
     }
-    val contentBytes =
-      if (contentFrom == 0 && contentLen == len && len == bytes.length) bytes
-      else java.util.Arrays.copyOfRange(bytes, contentFrom, contentFrom + contentLen)
+    // always a copy: `bytes` may be a reader's reused line buffer
+    val contentBytes = java.util.Arrays.copyOfRange(bytes, contentFrom, contentFrom + contentLen)
     val content = UTF8String.fromBytes(contentBytes)
     val clean = UTF8String.fromBytes(Ansi.stripBytes(contentBytes))
     new Line(ts, error, content, clean)

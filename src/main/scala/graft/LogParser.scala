@@ -57,14 +57,12 @@ object LogParser {
       .asInstanceOf[NewHadoopRDD[LongWritable, Text]]
   }
 
-  /** Strip one trailing `\r` (ScanLines semantics) and copy out of the
-    * reader's reused buffer.
+  /** The length of the line in `text`'s reused buffer, less one trailing
+    * `\r` (ScanLines semantics).
     */
-  @inline private def copyLine(text: Text): Array[Byte] = {
-    val buf = text.getBytes
-    var len = text.getLength
-    if (len > 0 && buf(len - 1) == '\r') len -= 1
-    java.util.Arrays.copyOf(buf, len)
+  @inline private def lineLength(text: Text): Int = {
+    val len = text.getLength
+    if (len > 0 && text.getBytes()(len - 1) == '\r') len - 1 else len
   }
 
   /** Full pipeline: log file(s) at `path` (a path, glob, or comma-separated
@@ -98,6 +96,14 @@ object LogParser {
     * initial group), in partition order. Pass B streams every split,
     * emitting finished catalyst rows. No shuffle, no sort, no window:
     * aggregate throughput scales with splits × per-core scanner speed.
+    *
+    * The frame declares its partitions sorted by `(file ASC, line_no ASC)`.
+    * That holds because each partition is one byte-range split of one
+    * file, read in line order, and `line_no` counts up by one per line
+    * from the split's prefix. The planner therefore drops the
+    * `sortWithinPartitions(file, line_no)` of [[ParquetIO.write]] (and any
+    * other local sort on a prefix of that order) instead of re-sorting
+    * sorted rows.
     */
   def parse(spark: SparkSession, path: String,
       splitMaxBytes: Long = DefaultSplitMaxBytes): DataFrame = {
@@ -115,10 +121,7 @@ object LogParser {
           var lastHdr: Array[Byte] = null
           it.foreach { case (_, text) =>
             count += 1
-            val buf = text.getBytes
-            var len = text.getLength
-            if (len > 0 && buf(len - 1) == '\r') len -= 1
-            val h = LineScanner.headerCleanOrNull(buf, len)
+            val h = LineScanner.headerCleanOrNull(text.getBytes, lineLength(text))
             // copy: `h` may alias the reader's reused line buffer
             if (h != null) lastHdr = h.copy().getBytes
           }
@@ -151,8 +154,8 @@ object LogParser {
             if (initGrp == null) UTF8String.EMPTY_UTF8
             else UTF8String.fromBytes(initGrp)
           it.map { case (_, text) =>
-            val bytes = copyLine(text)
-            val line = LineScanner.parse(bytes, bytes.length)
+            // parse copies the content out of the reader's reused buffer
+            val line = LineScanner.parse(text.getBytes, lineLength(text))
             if (line.isGroup) group = line.clean
             val r = new GenericInternalRow(Array[Any](
               line.timestamp, line.content, group,
@@ -164,6 +167,7 @@ object LogParser {
         },
         preservesPartitioning = true)
       .asInstanceOf[RDD[InternalRow]]
-    Shims.internalCreateDataFrame(spark, rows, Schema.parsedSchema)
+    Shims.internalCreateDataFrame(spark, rows, Schema.parsedSchema,
+      orderedBy = Seq(Schema.File, Schema.LineNo))
   }
 }

@@ -26,9 +26,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * Write: Zstd compression everywhere (the reference intends Zstd-3 but its
   * streaming writer silently falls back to defaults — reference
   * parquet.go:121-132 vs 161-164; we do not replicate that bug), rows
-  * pre-sorted by `(file, line_no)` which is also timestamp order, honoring
-  * the reference's sorting-columns metadata intent (parquet.go:124-127)
-  * while keeping the exact log line order reconstructible.
+  * sorted by `(file, line_no)` within each written file, which is also
+  * timestamp order, honoring the reference's sorting-columns metadata
+  * intent (parquet.go:124-127) while keeping the exact log line order
+  * reconstructible. A frame whose source declares that order, as
+  * [[LogParser.parse]]'s does, arrives sorted: the planner elides the sort
+  * and the rows are written as they come. `content`, nearly unique per
+  * line, is written without a dictionary, which would only fall back to
+  * plain encoding after paying for the lookups; the other columns keep
+  * theirs, and every column keeps its min/max statistics, which row-group
+  * pruning and [[footerLineCounts]] read.
   *
   * Read: fixed schema, mapped by name; extra/unknown columns in the file are
   * ignored and missing optional columns come back null — same tolerance as
@@ -50,6 +57,7 @@ object ParquetIO {
       .write
       .mode(mode)
       .option("compression", "zstd")
+      .option(s"parquet.enable.dictionary#${Schema.Content}", "false")
       .parquet(path)
   }
 

@@ -26,12 +26,19 @@ object Ansi {
   /** Strip over raw bytes. Operating on UTF-8 bytes is safe: the state machine
     * only reacts to ASCII bytes (0x1b, '[', digits, ';', letters), which never
     * occur inside UTF-8 continuation sequences.
+    *
+    * Returns `data` itself when nothing is stripped, and allocates nothing
+    * when no `ESC` or `[` occurs before the last byte.
     */
   def stripBytes(data: Array[Byte]): Array[Byte] = {
     val len = data.length
+    var first = 0
+    while (first < len - 1 && data(first) != 0x1b && data(first) != '[') first += 1
+    if (first >= len - 1) return data
     val out = new Array[Byte](len)
-    var n = 0
-    var i = 0
+    System.arraycopy(data, 0, out, 0, first)
+    var n = first
+    var i = first
     while (i < len) {
       val b = data(i)
       if (i < len - 1 && b == 0x1b && data(i + 1) == '[') {

@@ -1,9 +1,16 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Expression, SortOrder}
+import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Bridge to `private[sql]` / `private[spark]` pieces of Spark 4.
   *
@@ -21,13 +28,27 @@ object Shims {
     * CatalystTypeConverters per-row conversion — the rows are already in
     * catalyst form (UTF8String etc.), so ingest skips a full copy+convert
     * pass.
+    *
+    * `orderedBy` names columns each partition of `rdd` is already sorted
+    * by, ascending, in that order. The frame's scan declares that ordering,
+    * so the planner drops a `sortWithinPartitions` on a prefix of it
+    * (`RemoveRedundantSorts`). The caller vouches for it: a wrong ordering
+    * gives wrongly ordered output, not an error.
     */
   def internalCreateDataFrame(
       spark: SparkSession,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema)
+      rdd: RDD[InternalRow],
+      schema: StructType,
+      orderedBy: Seq[String] = Nil): DataFrame = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val output = DataTypeUtils.toAttributes(schema)
+    val ordering = orderedBy.map { name =>
+      SortOrder(output.find(_.name == name).getOrElse(
+        throw new IllegalArgumentException(s"orderedBy: no column $name in $schema")), Ascending)
+    }
+    classic.Dataset.ofRows(session,
+      LogicalRDD(output, rdd, UnknownPartitioning(0), ordering, false)(session))
+  }
 
   def registerFunction(
       spark: SparkSession,

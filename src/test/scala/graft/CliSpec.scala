@@ -93,8 +93,17 @@ class CliSpec extends AnyFunSuite {
     assert(huge.contains("line 11"), huge)
     assert(byGroup("2").startsWith("Entries in group matching 'section': 2 (limited to 2)\n"))
     val negative = byGroup("-1")
-    assert(negative.startsWith("Entries in group matching 'section': 0"), negative)
+    assert(negative.startsWith("Entries in group matching 'section': 0\n"), negative)
     assert(negative.contains("No entries found for the specified group."), negative)
+    assert(!negative.contains("limited to"), negative)
+    def seek(limit: String): String = captureOut {
+      Cli.runQuery(spark, Map("file" -> table, "op" -> "seek", "seek" -> "3", "limit" -> limit))
+    }
+    assert(seek("2").startsWith("Entries starting from row 3: 2 (limited to 2)\n"))
+    assert(seek("3000000000").startsWith("Entries starting from row 3: 9\n"))
+    val seekNegative = seek("-1")
+    assert(seekNegative.startsWith("Entries starting from row 3: 0\n"), seekNegative)
+    assert(!seekNegative.contains("limited to"), seekNegative)
   }
 
   test("query tail and seek on a foreign parquet (no line_no column)") {

@@ -1,9 +1,16 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.Row
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Parse-pipeline goldens ported from the reference test tables:
@@ -262,5 +269,94 @@ class LogParserSpec extends AnyFunSuite {
     // 3 splits: pass A probes the first two only, in one job
     val (_, passA) = jobTasksOf(LogParser.parse(spark, path, 100))
     assert(passA == Seq(2), s"pass A ran jobs of $passA tasks")
+  }
+
+  test("pass B copies each line out of the reader's buffer: equal-length lines equal the oracle row for row") {
+    // every line as long as the reader's line buffer, which is sized to the
+    // first line and then reused; headers make the carried group show any
+    // row still pointing into that buffer
+    val lines = (0 until 40).map {
+      case i if i % 7 == 0 => f"~~~ H$i%04d"
+      case i if i % 5 == 0 => f"$$ cmd$i%04d"
+      case i => f"line-$i%04d"
+    }
+    assert(lines.map(_.length).distinct == Seq(9))
+    val path = logFile(lines)
+    for (split <- Seq(LogParser.DefaultSplitMaxBytes, 100L)) {
+      val fast = LogParser.parse(spark, path, split).orderBy("line_no").collect()
+      val oracle = ParseOracle.parseExpr(spark, path, split).orderBy("line_no").collect()
+      assert(fast.map(field(_, "content")).toSeq == lines, s"split=$split")
+      assert(fast.toSeq == oracle.toSeq, s"split=$split")
+    }
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** The executed plan of the one Parquet write `body` runs, taken from the
+    * session's query-execution listeners.
+    */
+  private def writePlanOf(body: => Unit): SparkPlan = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (Plans.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+          plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 10000000000L
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size == 1, s"${plans.size} write plans")
+    plans.peek()
+  }
+
+  private def sorts(plan: SparkPlan): Int = Plans.collect(plan) { case s: SortExec => s }.size
+
+  /** `(file, line_no)` of each data file of the table at `dir`, as stored. */
+  private def storedOrder(dir: String): Seq[Seq[(String, Long)]] =
+    new java.io.File(dir).listFiles().map(_.getPath).filter(_.endsWith(".parquet")).sorted.toSeq
+      .map(f => spark.read.parquet(f).select("file", "line_no").collect().toSeq
+        .map(r => (r.getString(0), r.getLong(1))))
+
+  private def assertSortedFiles(dir: String, what: String): Seq[Seq[(String, Long)]] = {
+    val files = storedOrder(dir)
+    assert(files.nonEmpty, what)
+    for (rows <- files)
+      assert(rows == rows.sortBy(r => (r._1, r._2)) && rows.distinct == rows, s"$what: $rows")
+    files
+  }
+
+  test("ParquetIO.write elides the sort of a parse frame, 1 split and 3 splits; other frames keep it") {
+    val path = logFile(threeSplits)
+    val out = Files.createTempDirectory("graft-write-plan")
+    for ((split, files) <- Seq(LogParser.DefaultSplitMaxBytes -> 1, 100L -> 3)) {
+      val parsed = LogParser.parse(spark, path, split)
+      assert(sorts(parsed.sortWithinPartitions("file", "line_no").queryExecution.executedPlan) == 0)
+      val dir = out.resolve(s"parse-$split").toString
+      val plan = writePlanOf(ParquetIO.write(parsed, dir))
+      assert(sorts(plan) == 0, s"split=$split:\n$plan")
+      // each split's file holds its rows in line order, the files in file order
+      val stored = assertSortedFiles(dir, s"split=$split")
+      assert(stored.size == files, s"split=$split")
+      assert(stored.sortBy(_.head._2).flatten.map(_._2) == threeSplits.indices.map(_.toLong))
+      assert(ParquetIO.read(spark, dir).orderBy("line_no").collect().toSeq ==
+        parsed.orderBy("line_no").collect().toSeq, s"split=$split")
+    }
+    // frames that declare no order are still sorted before they are written
+    val parsed = LogParser.parse(spark, path)
+    val shuffled: Seq[(String, DataFrame)] = Seq(
+      "repartition" -> parsed.repartition(3, col("content")),
+      "createDataFrame" -> spark.createDataFrame(
+        parsed.collect().toSeq.reverse.asJava, parsed.schema))
+    for ((name, df) <- shuffled) {
+      assert(sorts(df.sortWithinPartitions("file", "line_no").queryExecution.executedPlan) == 1, name)
+      val dir = out.resolve(name).toString
+      assert(sorts(writePlanOf(ParquetIO.write(df, dir))) == 1, name)
+      val stored = assertSortedFiles(dir, name)
+      assert(stored.flatten.map(_._2).sorted == threeSplits.indices.map(_.toLong), name)
+    }
   }
 }

@@ -325,6 +325,40 @@ class QueriesSpec extends AnyFunSuite {
     assert(contents(Queries.seek(legacy, 5, Some(2))) == Seq("a-l5", "b-l0"))
   }
 
+  test("ParquetIO.write: no dictionary on content, a dictionary on group, min/max on file, line_no and content") {
+    val dir = Files.createTempDirectory("graft-encodings")
+    val log = dir.resolve("job.log")
+    // a generated job log: a timestamp on every line, a section header every
+    // 50 lines, a command every 7th, the rest distinct output lines
+    Files.write(log, (0 until 2000).map { i =>
+      val body =
+        if (i % 50 == 0) s"~~~ Section ${i / 50}"
+        else if (i % 7 == 0) s"$$ make step-$i"
+        else s"output line $i: ${(i * 7919) % 10007} bytes written"
+      s"\u001b_bk;t=${1700000000000L + 13L * i}\u0007$body\n"
+    }.mkString.getBytes("UTF-8"))
+    val table = dir.resolve("entries").toString
+    ParquetIO.write(LogParser.parse(spark, log.toString), table)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val blocks = new java.io.File(table).listFiles().map(_.getPath).filter(_.endsWith(".parquet"))
+      .toSeq.flatMap { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
+        try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
+      }
+    assert(blocks.map(_.getRowCount).sum == 2000L)
+    for (b <- blocks) {
+      val chunks = b.getColumns.asScala.map(c => c.getPath.toDotString -> c).toMap
+      def dictionary(name: String) = chunks(name).getEncodings.asScala.exists(_.usesDictionary)
+      assert(!dictionary(Schema.Content), chunks(Schema.Content).getEncodings)
+      assert(dictionary(Schema.Group), chunks(Schema.Group).getEncodings)
+      for (name <- Seq(Schema.File, Schema.LineNo, Schema.Content)) {
+        val st = chunks(name).getStatistics
+        assert(st != null && st.hasNonNullValue && st.isNumNullsSet, s"$name: $st")
+      }
+    }
+  }
+
   test("seek streams from row k with optional limit") {
     val rows = Queries.seek(parsed, 100, Some(10)).select("line_no").collect().map(_.getLong(0))
     assert(rows.toSeq == (100L to 109L).toSeq)
